@@ -1,44 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // default: one shuffle partition per core (the sf0.1 gate
-      // protocol). The scale sweeps raise it 10x per decade above sf10
-      // (SPARK_GRAFT_SHUFFLE_PARTITIONS=320 at sf100) so per-task sort
-      // volume stays constant — at 32 partitions an sf100 rank shuffle
-      // hands each task 19M rows (~900 MB), forcing multi-pass external
-      // sort spill that a fleet sized to the data never pays.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      // test parquet is MB-scale; split it so scans parallelize the same
-      // way a real cluster's 128 MB splits would. At multi-GB scale
-      // points the 1m default degenerates (16k splits each re-parsing a
-      // 16 GB file's footer — a harness artifact, not plan cost), so the
-      // scale sweeps override it to keep ~constant tasks per scan
-      // (16m at sf10, 160m at sf100), the shape of a fleet that grows
-      // with the data.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "1m"))
-      // SF-aware shuffle codec (r11): lz4 at gate scale (measured
-      // wall-neutral there), zstd from the sf10 class up (measured
-      // −35% exchange bytes on the heaviest shuffles — the engine
-      // default now, not an OPERATIONS.md footnote)
-      .config("spark.io.compression.codec",
-        GraftSession.shuffleCodecFor(sfDir))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // shuffle partitions, split size and the SF-aware shuffle codec
+    // (lz4 at gate scale, zstd from the sf10 class up) all come from
+    // the factory — see GraftSession.localConf for the scale knobs
+    val spark = GraftSession.local(dataDir = sfDir)
     // warmup: JIT/codegen + parquet footer cache, so the first timed
     // query doesn't absorb JVM startup (it's ~8 s of noise otherwise)
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Seq("lineitem", "events", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     // min of three timed runs per query, taken as INTERLEAVED FULL SWEEPS
     // (pass 1 over every query, then pass 2, then pass 3): the host is
@@ -103,7 +77,7 @@ object Bench {
             System.err.println(s"[vol] | $name | ${t.writeBytes / 1048576} | " +
               s"${t.writeRecords} | ${t.peakMemBytes / 1048576} |")
           }
-        } catch { case t: Throwable =>
+        } catch { case NonFatal(t) =>
           System.err.println(s"[bench] pass $pass $name FAILED: ${t.getClass.getSimpleName}: ${t.getMessage}")
           // a failed query's stages must not bleed into the next capture
           if (pass == 1) vol.snapshotAndReset()

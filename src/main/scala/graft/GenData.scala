@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic-data generator for scale validation beyond
@@ -44,6 +44,12 @@ object GenData {
   private val EventTypes = Array("view", "click", "purchase", "signup",
     "error")
 
+  /** `events.props` as written: exactly this format over k in 0..99.
+    * a5 (AnomalyML.a5Mahalanobis) extracts k by the offsets this
+    * string implies instead of parsing JSON, so a change here must
+    * move them together (AnomalyMLSpec pins the contract). */
+  val PropsFormat = "{\"k\": %d}"
+
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/testdata/sf1")
     val scale = args.drop(1).headOption.map(_.toDouble).getOrElse(1.0)
@@ -61,14 +67,8 @@ object GenData {
       require(bad.isEmpty, s"GenData: unknown table name(s) ${bad.mkString(",")} " +
         s"— valid: ${known.toSeq.sorted.mkString(",")}")
     }
-    val s = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors.toString)}]")
-      .appName("graft-gendata")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession.local(appName = "graft-gendata")
+    s.conf.set("spark.sql.shuffle.partitions", "32")
     import s.implicits._
 
     def n(base: Long) = math.max(1L, (base * scale).toLong)
@@ -194,7 +194,7 @@ object GenData {
       element_at(lit(EventTypes), (floor(u($"id", "ek") * 5) + 1).cast("int"))
         .as("event_type"),
       round(-log(lit(1.0) - u($"id", "ev")) * 50.0, 2).as("value"),
-      format_string("{\"k\": %d}", floor(u($"id", "ep") * 100).cast("int"))
+      format_string(PropsFormat, floor(u($"id", "ep") * 100).cast("int"))
         .as("props")), "events", 8)
 
     // ---- documents: 10-100 words off the 31-word vocab, 20 sources

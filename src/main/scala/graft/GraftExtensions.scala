@@ -8,37 +8,25 @@ import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.types.StringType
 
 import graft.functions.{MdHash64, VecCosine, VecDot, VecNormSq}
+import graft.plans.TopKPerGroup
 
-/** `SparkSessionExtensions` hook exposing graft's native expressions to
-  * SQL users:
+/** `SparkSessionExtensions` hook: graft's native expressions as SQL
+  * functions and its planner strategies (the [[TopKPerGroup]] node).
+  * Installed by [[GraftSession]]; a session built elsewhere installs
+  * it with `spark.sql.extensions=graft.GraftExtensions`:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions()) ...
-  * // or: spark.sql.extensions=graft.GraftExtensions
+  * val spark = GraftSession.local()
   * spark.sql("SELECT vec_cosine(a.embedding, b.embedding) FROM ...")
   * }}}
   */
-object GraftExtensions {
-  /** Register graft's SQL functions on an already-built session (for
-    * sessions not constructed through GraftSession/withExtensions). */
-  def registerInto(s: org.apache.spark.sql.SparkSession): Unit = {
-    org.apache.spark.sql.GraftShim.registerFunction(s, "vec_dot",
-      args => VecDot(args(0), args(1)))
-    org.apache.spark.sql.GraftShim.registerFunction(s, "vec_norm_sq",
-      args => VecNormSq(args(0)))
-    org.apache.spark.sql.GraftShim.registerFunction(s, "vec_cosine",
-      args => VecCosine(args(0), args(1)))
-    org.apache.spark.sql.GraftShim.registerFunction(s, "graft_mdhash64",
-      args => MdHash64(Cast(args(0), StringType)))
-  }
-}
-
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def info(name: String, usage: String) =
     new ExpressionInfo(classOf[VecDot].getName, null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPlannerStrategy(_ => TopKPerGroup.Strategy)
     ext.injectFunction((FunctionIdentifier("vec_dot"),
       info("vec_dot", "vec_dot(a, b) - dot product of two float arrays"),
       (args: Seq[Expression]) => VecDot(args(0), args(1))))

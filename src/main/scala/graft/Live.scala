@@ -16,10 +16,7 @@ object Live {
   def main(args: Array[String]): Unit = {
     val seconds = args.headOption.map(_.toInt).getOrElse(10)
     val rps = args.drop(1).headOption.map(_.toInt).getOrElse(8)
-    implicit val spark = GraftSession.local(
-      cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-        .getOrElse(Runtime.getRuntime.availableProcessors),
-      appName = "graft-live")
+    implicit val spark = GraftSession.local(appName = "graft-live")
     val rc = RateControl(rowsPerSecond = Some(rps.toLong))
     val rate = Pipeline.rateSource(spark, rc)
     val flagged = Pipeline.detect(

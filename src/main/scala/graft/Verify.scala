@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,16 +10,7 @@ object Verify {
     // the driver always runs the full map)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(dataDir = sfDir)
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -51,7 +42,9 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      // NonFatal: an OutOfMemoryError/LinkageError aborts the dump
+      // instead of reading as one failed query
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
@@ -63,7 +56,7 @@ object Verify {
     // rows-only
     val dynamic =
       try SparkEntry.dynamicOracleSql(spark, sfDir)
-      catch { case scala.util.control.NonFatal(e) =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] dynamic oracle build failed: ${e.getMessage}")
         Map.empty[String, String]
       }

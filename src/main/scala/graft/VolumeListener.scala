@@ -6,9 +6,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Per-stage shuffle/spill/memory accumulator — the HOST-INDEPENDENT
   * measure of a query's exchange volume (wall time on this box swings
-  * 5× with the hypervisor's day; bytes don't). Shared by
-  * [[VolumeProbe]] (single-query deep probe) and [[Bench]] (per-query
-  * volume capture on pass 1, feeding the `volume_verdict` line —
+  * 5× with the hypervisor's day; bytes don't). Used by [[Bench]]
+  * (per-query volume capture on pass 1, feeding the `volume_verdict` line —
   * VERDICT r11 item 3: a 2× wall breach with byte-identical volumes
   * must be self-adjudicating in the round artifact).
   *

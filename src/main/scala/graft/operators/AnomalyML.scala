@@ -592,6 +592,17 @@ object AnomalyML {
       .orderBy("event_id")
   }
 
+  /** a5's y: the k of a `GenData.PropsFormat` props string, cut out
+    * by the format's own prefix/suffix lengths (1-based substring from
+    * the digit run to the closing suffix) — codegen substring
+    * arithmetic, no JSON parse. */
+  private[graft] def propsY: Column = {
+    val pre = graft.GenData.PropsFormat.indexOf("%d")
+    val post = graft.GenData.PropsFormat.length - pre - 2
+    expr(s"substring(props, ${pre + 1}, length(props) - ${pre + post})")
+      .cast("int").cast("double")
+  }
+
   /** a5_mahalanobis — multivariate outliers per event_type: Mahalanobis
     * distance of the (value, k) feature pair against the group's own
     * mean vector and 2×2 covariance, flagging d² > 9 (≈1% tail for
@@ -612,24 +623,23 @@ object AnomalyML {
     * y extraction (r14, VERDICT r13 item 1 — a5 was the one standing
     * 2x gate breach): pure-codegen substring arithmetic instead of
     * get_json_object. The events generator writes props as exactly
-    * format_string("{\"k\": %d}", k) (GenData, k in 0..99), so the
-    * digit run is substring(7 .. len-1) by construction — the same
-    * format dependence the oracle itself leans on (it reads y with
-    * regexp_extract(props, '[0-9]+', 0)). The JSON parse ran once per
-    * row in BOTH passes and was the query's dominant cost: A5Probe
-    * (min-of-6, sf0.1) read the extraction scan 0.50 -> 0.13 s and the
-    * full query 1.84 -> 0.71 s (0.38x of the 1.882 gate base), with
-    * the probe's bit-exactness gate (full-output collect compare vs
-    * the get_json_object form) at 0 mismatches; cast("") -> null keeps
-    * the isNotNull contract on malformed rows. */
+    * format_string(GenData.PropsFormat, k) (k in 0..99), so the digit
+    * run sits between the offsets that format implies ([[propsY]]) —
+    * the same format dependence the oracle itself leans on (it reads y
+    * with regexp_extract(props, '[0-9]+', 0)). The JSON parse ran once
+    * per row in BOTH passes and was the query's dominant cost: measured
+    * in 85004d8 (min-of-6, sf0.1), the extraction scan 0.50 -> 0.13 s
+    * and the full query 1.84 -> 0.71 s (0.38x of the 1.882 gate base),
+    * with a bit-exactness gate (full-output collect compare vs the
+    * get_json_object form) at 0 mismatches; cast("") -> null keeps the
+    * isNotNull contract on malformed rows. */
   def a5Mahalanobis(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     def dec18(c: Column) = sum(c.cast(DecimalType(18, 6))).cast("double")
     def dec28(c: Column) = sum(c.cast(DecimalType(28, 10))).cast("double")
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("event_type"), col("value").as("x"),
-        expr("substring(props, 7, length(props) - 7)")
-          .cast("int").cast("double").as("y"))
+        propsY.as("y"))
       .filter(col("y").isNotNull)
     val st = ev.groupBy("event_type").agg(
         count(lit(1)).as("n"),

@@ -314,7 +314,7 @@ object Dedup {
     // per-partition hash with no per-key state. The typed flatMap runs
     // twice (count branch + probe branch), both over the cached pfx
     // frame — measured cheaper than caching the uncapped bigram frame
-    // to dedupe it (D16Probe semi2 1.61 s vs semi3 1.07 s at sf10; an
+    // to dedupe it (80b9194: semi2 1.61 s vs semi3 1.07 s at sf10; an
     // O(corpus-bigrams) cache is also a non-starter at 100 TB, the
     // e5/e7 re-scan-the-fact precedent). The capped output is cached
     // so the self-join pays the semi probe once; the cached plan
@@ -324,12 +324,12 @@ object Dedup {
     // cache had). SHJ build memory is bounded per PARTITION by the
     // shuffle-partition protocol; the df-cap itself only bounds the
     // per-key candidate stream of the self-join. Measured
-    // (graft.D16Probe, bit-exactness gate 0 diffs both directions at
+    // (80b9194, bit-exactness gate 0 diffs both directions at
     // sf0.1 AND sf10): blocking stage TIES the r13 cached-window arm
     // at sf10 (1.067 vs 1.072 s min-of-4) and reads +0.13 s at sf0.1
     // (0.846 vs 0.717 — the second flatMap pass over the pfx cache);
     // WindowExec and its 635 MB sf10 sort peak are gone from the plan
-    // (VolumeProbe peak re-measured in the same commit).
+    // (peak exec memory re-measured in the same commit).
     val kept = bg.groupBy("g").agg(count(lit(1)).as("df_g"))
       .filter(col("df_g") <= maxDf).select("g")
     val bgkC = bg.join(kept.hint("shuffle_hash"), Seq("g"), "left_semi")
@@ -751,8 +751,8 @@ object Dedup {
     // cached (r13): both the argmax pass and the member→keeper join
     // read it, and `clusters` (CC output) is a materialized RDD while
     // `quality` is a live plan — uncached, the quality pass (a full
-    // fact scan at corpus scale) ran TWICE (PostExec runtime audit:
-    // 3 documents scans, 0 reused). O(clustered docs) rows, 4 columns.
+    // fact scan at corpus scale) ran TWICE (ed4bdad runtime audit of
+    // the final plan: 3 documents scans, 0 reused). O(clustered docs) rows, 4 columns.
     val scored = clusters.join(quality, "doc_id").cacheIf()
     // argmax per cluster through the bounded k=1 heaps — ≤ 1 row per
     // (cluster, partition) shuffles, never a full per-cluster sort

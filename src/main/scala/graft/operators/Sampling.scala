@@ -217,7 +217,7 @@ object Sampling {
       .withColumn("rb", expr("ok >> 55"))
     // phase 1: (source, bucket) counts — a KB-scale driver pull;
     // phase 2: running offsets per source, rejoined via broadcast.
-    // The join is a MEASURED choice (r11, graft.I7Probe interleaved
+    // The join is a MEASURED choice (r11, f00f1b6 interleaved
     // A/B at sf0.1: join min 0.42 s vs a literal nested-CASE attach
     // 0.71 s — the sources×32 when-chain pays Janino compile per run
     // and would also pay O(sources) per row at high provenance

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
   *
   * Execution shape: a typed flatMap emitting (doc_id, hash) pairs
   * directly — measured 6× faster at sf0.1 (0.4 s vs 2.5 s warm,
-  * graft.IdxBench) than the declarative
+  * d972764) than the declarative
   * `transform(sequence…) → explode → xxhash64` form, because array
   * HOFs run interpreted (the same measurement that shaped d4, see its
   * scaladoc) and the intermediate shingle-string array never needs to

@@ -91,7 +91,7 @@ object TextOps {
   /** All word bigrams of a (…, text) frame, one row each. */
   /** All bigram occurrences (not distinct) as a typed flatMap — the
     * array-HOF transform/explode form runs interpreted and was ~6×
-    * slower (graft.IdxBench's shape measurement; same fix as
+    * slower (d972764's shape measurement; same fix as
     * Shingles.index). A doc of n words emits max(n−1, 1) bigrams,
     * mirroring the `greatest(size − 2, 0)` convention of the t6
     * oracle. */

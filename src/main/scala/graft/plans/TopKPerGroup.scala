@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
@@ -164,7 +164,9 @@ object TopKPerGroup {
       copy(child = newChild)
   }
 
-  /** Planner strategy: logical node → partial + final pair. */
+  /** Planner strategy: logical node → partial + final pair. Installed
+    * by [[graft.GraftExtensions]], so [[perKey]] plans on any session
+    * built through [[graft.GraftSession]]. */
   object Strategy extends SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
       case n: Node =>
@@ -177,12 +179,6 @@ object TopKPerGroup {
       case _ => Nil
     }
   }
-
-  /** Idempotently register the strategy on a session. */
-  def register(s: SparkSession): Unit =
-    if (!s.experimental.extraStrategies.contains(Strategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ Strategy
 
   /** Public API: top `k` rows per `groupCols` ordered by `orderCols`,
     * with a 1-based `rank` column appended. Order must be deterministic
@@ -206,7 +202,6 @@ object TopKPerGroup {
     import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
     val spark = df.sparkSession
-    register(spark)
     // Column → catalyst via the analyzer (a Column's expression is a
     // lazy ColumnNodeExpression wrapper that captures non-serializable
     // internal nodes if embedded directly): run df.sort / df.select

@@ -102,19 +102,10 @@ object LiveSoak {
     val nKeys8 = 100 // st8 CUSUM keys
     val nKeys3 = 8   // st3 ring keys (IF refit per key per batch is the pricey part)
     val nKeys24 = 50 // st24 snapshot keys
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-live-soak")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "16"))
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(appName = "graft-live-soak")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val s: SparkSession = spark
     import spark.implicits._
 

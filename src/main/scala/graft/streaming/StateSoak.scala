@@ -38,19 +38,9 @@ object StateSoak {
     // ≤ ~500k-row driver batches: 5 readings/key/batch at 1e5 keys,
     // 1 at 1e6
     val perBatch = math.max(1, 500000 / nKeys)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-state-soak")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(appName = "graft-state-soak")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val s: SparkSession = spark
     implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._

@@ -19,11 +19,4 @@ object GraftShim {
   /** The analyzed logical plan backing a DataFrame. */
   def logicalPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
-
-  /** Register a temp SQL function on an ALREADY-BUILT session (the
-    * withExtensions path only works at session construction). */
-  def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 class GraftExtensionsSpec extends SparkSpec {
 
   test("vec_dot/vec_norm_sq/vec_cosine work from SQL and match VectorOps") {
-    GraftExtensions.registerInto(spark)
     Tables.embeddings(spark, sf).limit(50).createOrReplaceTempView("emb")
     val viaSql = spark.sql(
       """SELECT a.vec_id AS x, b.vec_id AS y,
@@ -34,7 +33,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("graft_mdhash64 from SQL matches the conv/substr/md5 built-in chain") {
-    GraftExtensions.registerInto(spark)
     val rows = spark.sql(
       """SELECT graft_mdhash64(id) AS native,
         |  CAST(conv(substr(md5(CAST(id AS STRING)), 1, 15), 16, 10) AS BIGINT) AS chain

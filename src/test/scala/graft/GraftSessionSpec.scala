@@ -48,4 +48,47 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(GraftSession.clusterDefaults("spark.sql.adaptive.enabled")
       === "true")
   }
+
+  // ---- the local factory's conf, as data (GraftSession.localConf):
+  // every main, the specs and the benchmark build their session here,
+  // so this table IS the benchmark's session
+
+  private val noEnv: String => Option[String] = _ => None
+
+  test("local conf with an empty env is exactly the shipped table") {
+    assert(GraftSession.localConf(6, "", noEnv) === Map(
+      "spark.master" -> "local[6]",
+      "spark.sql.shuffle.partitions" -> "6",
+      "spark.sql.files.maxPartitionBytes" -> "1m",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.io.compression.codec" -> "lz4",
+      "spark.ui.enabled" -> "false"))
+    val small = tmpDirWithBytes(50L << 20)
+    assert(GraftSession.localConf(6, small.getAbsolutePath, noEnv)
+      === GraftSession.localConf(6, "", noEnv))
+    val big = tmpDirWithBytes(GraftSession.ZstdCutoverBytes + 1)
+    assert(GraftSession.localConf(6, big.getAbsolutePath, noEnv)
+      === GraftSession.localConf(6, "", noEnv) +
+        ("spark.io.compression.codec" -> "zstd"))
+    assert(GraftSession.defaultCores(noEnv)
+      === Runtime.getRuntime.availableProcessors)
+  }
+
+  test("each session env variable overrides only its own key") {
+    val base = GraftSession.localConf(6, "", noEnv)
+    Seq(
+      "SPARK_GRAFT_SHUFFLE_PARTITIONS" -> ("spark.sql.shuffle.partitions", "320"),
+      "SPARK_GRAFT_MAX_PARTITION_BYTES" -> ("spark.sql.files.maxPartitionBytes", "16m"),
+      "SPARK_GRAFT_IO_CODEC" -> ("spark.io.compression.codec", "zstd")
+    ).foreach { case (v, (key, value)) =>
+      assert(GraftSession.localConf(6, "", Map(v -> value).get)
+        === base + (key -> value), v)
+    }
+    // SPARK_GRAFT_CPUS is the default core count and nothing else
+    val cpus = Map("SPARK_GRAFT_CPUS" -> "3").get _
+    assert(GraftSession.defaultCores(cpus) === 3)
+    assert(GraftSession.localConf(6, "", cpus) === base)
+  }
 }

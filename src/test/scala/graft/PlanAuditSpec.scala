@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 
 /** Plan-shape regression gate (SURVEY.md §5): every SparkEntry query's
   * PHYSICAL plan must be free of unbounded join strategies, and the
@@ -22,28 +22,6 @@ class PlanAuditSpec extends SparkSpec {
       case other => other.children ++ other.subqueries
     }
     p +: kids.flatMap(allNodes)
-  }
-
-  /** [[allNodes]] that additionally descends INTO cached relations
-    * (each distinct relation once) — caches are part of the plan
-    * shape, and what is under them must be auditable too — and into
-    * finalized AQE query stages (QueryStageExec is a leaf whose real
-    * subtree hangs off `.plan`; without this, post-execution shapes
-    * hide every exchange behind a stage wrapper). */
-  private def allNodesThroughCaches(p: SparkPlan): Seq[SparkPlan] = {
-    val seen = scala.collection.mutable.Set[Int]()
-    def walk(n: SparkPlan): Seq[SparkPlan] = {
-      val kids = n match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case qs: QueryStageExec => Seq(qs.plan)
-        case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          val cp = im.relation.cachedPlan
-          if (seen.add(System.identityHashCode(cp))) Seq(cp) else Nil
-        case other => other.children ++ other.subqueries
-      }
-      n +: kids.flatMap(walk)
-    }
-    walk(p)
   }
 
   /** Run `body` with the library's materialize wrappers disabled
@@ -77,7 +55,7 @@ class PlanAuditSpec extends SparkSpec {
     val offenders = withFullPlans {
       SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
         val plan = fn(spark, sf).queryExecution.executedPlan
-        allNodesThroughCaches(plan).collect {
+        Explain.planNodes(plan).collect {
           case _: CartesianProductExec => s"$name: CartesianProduct"
           case _: BroadcastNestedLoopJoinExec if !bnljAllowed.contains(name) =>
             s"$name: BroadcastNestedLoopJoin"
@@ -104,7 +82,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("a5's y extraction is codegen substring arithmetic, not a JSON parse (r14)") {
     // the per-row get_json_object parse ran in BOTH fact passes and was
-    // a5's dominant cost (A5Probe: full query 1.84 -> 0.71 s at sf0.1);
+    // a5's dominant cost (85004d8: full query 1.84 -> 0.71 s at sf0.1);
     // the generator's fixed `{"k": %d}` props shape makes the substring
     // form bit-exact (probe gate: 0 mismatches; Round3bOpsSpec still
     // cross-checks the output against a json-extracted reference)
@@ -130,7 +108,7 @@ class PlanAuditSpec extends SparkSpec {
       // internal scan ONCE (the cache is the mechanism of the
       // single-scan claim; without full-plan mode this plan is an
       // opaque checkpoint scan and the assertion would be vacuous)
-      val factScans = allNodesThroughCaches(plan).collect {
+      val factScans = Explain.planNodes(plan).collect {
         case s: FileSourceScanExec
             if s.metadata.get("Location").exists(_.contains("events")) => s
       }
@@ -254,7 +232,7 @@ class PlanAuditSpec extends SparkSpec {
     withFullPlans {
       val plan = operators.Dedup.fuzzyJoin(probe, corpus, corpusRows = 1L << 24)
         .queryExecution.executedPlan
-      val sizedN = allNodesThroughCaches(plan).collect {
+      val sizedN = Explain.planNodes(plan).collect {
         case s: ShuffleExchangeExec
           if s.outputPartitioning.numPartitions == expected => s
       }.size
@@ -367,7 +345,7 @@ class PlanAuditSpec extends SparkSpec {
     withFullPlans {
       udfFree.foreach { q =>
         val plan = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
-        val udfs = allNodesThroughCaches(plan).flatMap(_.expressions.flatMap(
+        val udfs = Explain.planNodes(plan).flatMap(_.expressions.flatMap(
           _.collect {
             case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u
           }))
@@ -388,19 +366,8 @@ class PlanAuditSpec extends SparkSpec {
   // (GRAFT_RECORD_GOLDEN=1 prints the current table).
 
   /** Count of the plan-shape-bearing node kinds, zero entries elided. */
-  private def shapeOf(plan: SparkPlan): Map[String, Int] = {
-    val nodes = allNodesThroughCaches(plan)
-    Map(
-      "shuffle" -> nodes.count(_.isInstanceOf[ShuffleExchangeExec]),
-      "broadcast" -> nodes.count(_.isInstanceOf[BroadcastExchangeExec]),
-      "reused_exchange" -> nodes.count(_.isInstanceOf[ReusedExchangeExec]),
-      "sort" -> nodes.count(_.isInstanceOf[SortExec]),
-      "bhj" -> nodes.count(_.isInstanceOf[BroadcastHashJoinExec]),
-      "smj" -> nodes.count(_.isInstanceOf[SortMergeJoinExec]),
-      "shj" -> nodes.count(_.isInstanceOf[ShuffledHashJoinExec]),
-      "bnlj" -> nodes.count(_.isInstanceOf[BroadcastNestedLoopJoinExec])
-    ).filter(_._2 > 0)
-  }
+  private def shapeOf(plan: SparkPlan): Map[String, Int] =
+    Explain.shape(plan).filter(_._2 > 0).toMap
 
   // Recorded 2026-08-16 (r10 — ALL 104 queries, VERDICT r9 item 6) at
   // sf0.001, local[4], shuffle partitions 4, default broadcast
@@ -447,7 +414,7 @@ class PlanAuditSpec extends SparkSpec {
     // ≤ distinct-bigram partial rows, not posting lists); sort 1 =
     // output order only (the window sort is gone — sf10 peak exec mem
     // 635 → 519 MB, records +2.5% = exactly the partial-count rows).
-    // D16Probe bit-exactness gate 0 diffs at sf0.1 AND sf10; blocking
+    // 80b9194 bit-exactness gate 0 diffs at sf0.1 AND sf10; blocking
     // stage ties r13's cached-window arm at sf10 (1.067 vs 1.072 s),
     // +0.13 s at sf0.1 (the second flatMap pass) — the q3-Bloom
     // precedent: gate scale pays, the scale hazard goes.
@@ -593,26 +560,54 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  /** `file:line: text` of every line under src/main/scala matching
+    * `pat`, skipping files named in `except`. */
+  private def mainSourceHits(pat: String,
+      except: Set[String] = Set.empty): List[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"expected to run from the repo root, cwd=${sys.props("user.dir")}")
+    val re = java.util.regex.Pattern.compile(pat)
+    val walk = java.nio.file.Files.walk(root)
+    try {
+      walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          !except.contains(p.getFileName.toString))
+        .flatMap { p =>
+          java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (line, i) if re.matcher(line).find() => s"$p:${i + 1}: $line"
+          }
+        }.toList
+    } finally walk.close()
+  }
+
   test("main source tree registers zero Scala UDFs (r9: the s3 probe was the last)") {
     // the plan-level check above only sees queries it lists; this is
     // the whole-engine invariant — `udf(` appearing anywhere in main is
     // a regression (tests may use UDFs freely: they are the twin
     // formulations the expressions are pinned against)
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root),
-      s"expected to run from the repo root, cwd=${sys.props("user.dir")}")
-    val pat = java.util.regex.Pattern.compile("""\budf\s*\(""")
-    val walk = java.nio.file.Files.walk(root)
-    val hits = try {
-      walk.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .flatMap { p =>
-          java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
-            case (line, i) if pat.matcher(line).find() => s"$p:${i + 1}: $line"
-          }
-        }.toList
-    } finally walk.close()
+    val hits = mainSourceHits("""\budf\s*\(""")
     assert(hits.isEmpty, s"Scala UDF registrations in main:\n${hits.mkString("\n")}")
+  }
+
+  test("one session factory: builders, extraStrategies and session env reads stay in GraftSession") {
+    // a main that builds its own session runs a different engine from
+    // the one the specs and the benchmark exercise (no extensions, its
+    // own knob defaults); strategies register through
+    // GraftExtensions.injectPlannerStrategy, never by mutating a live
+    // session; the session env variables are read in one place
+    val builders = mainSourceHits("""SparkSession\.builder\s*\(""",
+      except = Set("GraftSession.scala"))
+    assert(builders.isEmpty,
+      s"SparkSession.builder() outside GraftSession:\n${builders.mkString("\n")}")
+    val strategies = mainSourceHits("""extraStrategies""")
+    assert(strategies.isEmpty,
+      s"experimental.extraStrategies in main:\n${strategies.mkString("\n")}")
+    val knobs = mainSourceHits(
+      """"SPARK_GRAFT_(CPUS|SHUFFLE_PARTITIONS|MAX_PARTITION_BYTES|IO_CODEC)"""",
+      except = Set("GraftSession.scala"))
+    assert(knobs.isEmpty,
+      s"session env variables read outside GraftSession:\n${knobs.mkString("\n")}")
   }
 }

@@ -4,16 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one per suite, torn down after). */
+/** Shared local SparkSession for specs: the shipped factory at 4 cores
+  * (the test warehouse dir comes in as a `spark.*` system property,
+  * see build.sbt). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession.local(4, appName = getClass.getSimpleName)
 
   val sf: String = "/root/testdata/sf0.001"
 

@@ -138,4 +138,20 @@ class AnomalyMLSpec extends SparkSpec {
     val got = rows.map(r => (r.getLong(0), r.getDouble(3), r.getDouble(4))).toSeq
     assert(got == expect)
   }
+
+  test("a5's props format contract: every events.props row is GenData's format and y is its digit run") {
+    // a5 cuts y out by the offsets GenData.PropsFormat implies; a
+    // generator change must fail here instead of silently nulling y
+    val PropsRe = """^\{"k": \d+\}$"""
+    assert(graft.GenData.PropsFormat.format(42).matches(PropsRe))
+    val ev = graft.Tables.events(spark, sf).select(
+      col("props"),
+      AnomalyML.propsY.as("y"),
+      regexp_extract(col("props"), "[0-9]+", 0).cast("double").as("ref"))
+    assert(ev.count() > 0)
+    assert(ev.filter(!col("props").rlike(PropsRe)).count() === 0,
+      "events.props rows outside the {\"k\": %d} format")
+    assert(ev.filter(col("y").isNull || col("y") =!= col("ref")).count() === 0,
+      "a5's extracted y differs from the props digit run")
+  }
 }
