@@ -121,21 +121,27 @@ object Bench {
     * same one-authoritative-table discipline as the gate table). */
   private[graft] def loadVolumeBaseline(path: String = "BASELINE_SELF.md")
       : Map[String, (Long, Long, Long)] = {
-    val f = Seq(sys.env.getOrElse("SPARK_GRAFT_BASELINE", path),
-        "/root/repo/BASELINE_SELF.md")
-      .map(new java.io.File(_)).find(_.exists())
-      .getOrElse(new java.io.File(path))
-    if (!f.exists()) Map.empty
+    val Row = """\|\s*([a-z]\w+)\s*\|\s*(\d+)\s*\|\s*(\d+)\s*\|\s*(\d+)\s*\|""".r
+    authoritativeLines(path, "## Volume table (authoritative")
+      .collect { case Row(q, wmb, wrec, pk) =>
+        q -> ((wmb.toLong, wrec.toLong, pk.toLong)) }.toMap
+  }
+
+  /** The lines of the ONE authoritative table under its `marker`
+    * heading in `path` (r8, ADVICE r7): historical/superseded tables
+    * elsewhere in the file never feed the gate, so insertion order
+    * can't silently change baselines. Empty when the file or the
+    * marker is missing. */
+  private def authoritativeLines(path: String, marker: String): Seq[String] = {
+    val f = new java.io.File(path)
+    if (!f.exists()) Nil
     else {
-      val Row = """\|\s*([a-z]\w+)\s*\|\s*(\d+)\s*\|\s*(\d+)\s*\|\s*(\d+)\s*\|""".r
       val lines = new String(
         java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
         .linesIterator.toSeq
-      val auth = lines.indexWhere(_.startsWith("## Volume table (authoritative"))
-      if (auth < 0) Map.empty
+      val auth = lines.indexWhere(_.startsWith(marker))
+      if (auth < 0) Nil
       else lines.drop(auth + 1).takeWhile(!_.startsWith("## "))
-        .collect { case Row(q, wmb, wrec, pk) =>
-          q -> ((wmb.toLong, wrec.toLong, pk.toLong)) }.toMap
     }
   }
 
@@ -229,27 +235,9 @@ object Bench {
 
   /** Parse the `| query | sec |` table out of BASELINE_SELF.md. */
   private[graft] def loadBaseline(path: String = "BASELINE_SELF.md"): Map[String, Double] = {
-    val f = Seq(sys.env.getOrElse("SPARK_GRAFT_BASELINE", path),
-        "/root/repo/BASELINE_SELF.md")
-      .map(new java.io.File(_)).find(_.exists())
-      .getOrElse(new java.io.File(path))
-    if (!f.exists()) Map.empty
-    else {
-      val Row = """\|\s*([a-z]\w+)\s*\|\s*([0-9.]+)\s*\|""".r
-      val lines = new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        .linesIterator.toSeq
-      // r8 (ADVICE r7): the gate is the ONE authoritative table under
-      // its marker heading — historical/superseded tables elsewhere in
-      // the file never feed the gate, so insertion order can't
-      // silently change baselines. Fallback (marker absent): the old
-      // last-row-wins parse of the pre-sf1 region.
-      val auth = lines.indexWhere(_.startsWith("## Gate table (authoritative"))
-      val region =
-        if (auth >= 0) lines.drop(auth + 1).takeWhile(!_.startsWith("## "))
-        else lines.takeWhile(!_.startsWith("## sf1"))
-      region.collect { case Row(q, s) => q -> s.toDouble }.toMap
-    }
+    val Row = """\|\s*([a-z]\w+)\s*\|\s*([0-9.]+)\s*\|""".r
+    authoritativeLines(path, "## Gate table (authoritative")
+      .collect { case Row(q, s) => q -> s.toDouble }.toMap
   }
 
   /** The ambient-host calibration controls (r10, VERDICT r9 item 3):

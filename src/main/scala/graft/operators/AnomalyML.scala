@@ -398,9 +398,6 @@ object AnomalyML {
         case (cell, want) if assumed(cell) != want => cell
       }.toSet
       assumed = wanted.withDefaultValue((0.0, 0.0))
-      if (sys.env.contains("GRAFT_DEBUG_CUSUM"))
-        System.err.println(s"[cusum] round $rounds scanned=${scanned.length} " +
-          s"dirty=${dirty.size}")
     }
     // final distributed pass: alarms from the exact start states
     val startsBc = s.sparkContext.broadcast(assumed)

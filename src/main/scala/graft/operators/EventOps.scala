@@ -584,8 +584,7 @@ object EventOps {
       topK: Int = 20): DataFrame =
     windowDrift(Tables.events(s, dir)
       .select(col("event_id"), col("event_type"),
-        col("ts").cast("long").as("secs"), col("value")), w, topK,
-      chunked = true)
+        col("ts").cast("long").as("secs"), col("value")), w, topK)
 
   /** The full-window shift scan of [[windowDrift]] (every row with W
     * complete rows on each side, unranked) — the stage the st17
@@ -781,17 +780,18 @@ object EventOps {
     (BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
       * BigDecimal(1000000)).toLongExact
 
+  /** Exact decimal(…,6) → double: one correctly-rounded cast, the same
+    * step as the batch scan's `.cast("double")` on the window sum. */
   private[graft] def microsToDouble(sum: Long): Double =
     new java.math.BigDecimal(java.math.BigInteger.valueOf(sum), 6).doubleValue()
 
   /** Generic core of [[e18WindowDrift]] over any
-    * (event_id, event_type, secs, value) frame. `chunked` selects the
-    * keys×chunks-parallel scan ([[driftScanChunked]], bit-identical —
-    * spec-pinned) over the |keys|-parallel window form. */
-  def windowDrift(ev: DataFrame, w: Int = 50, topK: Int = 20,
-      chunked: Boolean = false): DataFrame = {
-    val scan = if (chunked) driftScanChunked(ev, w) else driftScan(ev, w)
-    graft.plans.TopKPerGroup.perKey(scan,
+    * (event_id, event_type, secs, value) frame. [[driftScanChunked]]
+    * picks the keys×chunks-parallel scan or the |keys|-parallel window
+    * form from the input's size and key count (bit-identical —
+    * spec-pinned). */
+  def windowDrift(ev: DataFrame, w: Int = 50, topK: Int = 20): DataFrame = {
+    graft.plans.TopKPerGroup.perKey(driftScanChunked(ev, w),
         Seq(col("event_type")),
         Seq(abs(col("shift")).desc, col("event_id")), topK)
       .select(col("event_id"), col("event_type"), col("value"),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Per-key CUSUM state: Welford baseline (frozen once armed) + the two
@@ -21,8 +21,7 @@ case class DriftAlarm(ts: java.sql.Timestamp, plant_type: String,
   * instead of being silently absorbed into a moving estimate.
   *
   * Scale: O(1) doubles of state per key (5 numbers), hash-partitioned;
-  * arbitrarily hot keys stream through. Remove a key's state (idle
-  * timeout) to re-arm it against a fresh baseline after migrations.
+  * arbitrarily hot keys stream through.
   */
 object DriftDetector {
 
@@ -66,25 +65,11 @@ object DriftDetector {
   }
 
   /** Wire the drift detector over parsed telemetry (streaming or
-    * batch). `idleTimeout` evicts (and thereby re-arms) keys that stop
-    * sending. */
-  def detect(parsed: Dataset[Reading], idleTimeout: Option[String] = None)(
-      implicit s: SparkSession): Dataset[DriftAlarm] = {
-    import s.implicits._
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
+    * batch). */
+  def detect(parsed: Dataset[Reading]): Dataset[DriftAlarm] = {
+    import parsed.sparkSession.implicits._
     parsed.groupByKey(_.plant_type)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-        (key: String, rows: Iterator[Reading], state: GroupState[DriftState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val out = detectGroup(key, rows, state)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            out
-          }
-      }
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        detectGroup)
   }
 }

@@ -32,36 +32,21 @@ case class FilledRow(event_id: Long, user_id: Long, secs: Long,
   */
 object ForwardFill {
 
-  /** `idleTimeout` (e.g. "1 hour") evicts state for keys that stop
-    * sending — with an unbounded key universe (devices come and go)
-    * even one double per key accumulates forever; an evicted key that
-    * reappears simply restarts with no carry value, which is the right
-    * semantics for a sensor returning after a long outage anyway. */
-  def fill(rows: Dataset[GapRow],
-      idleTimeout: Option[String] = None): Dataset[FilledRow] = {
+  def fill(rows: Dataset[GapRow]): Dataset[FilledRow] = {
     import rows.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     rows.groupByKey(_.key)
       .flatMapGroupsWithState[Option[Double], FilledRow](
-        OutputMode.Append, timeoutConf) {
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: Long, it: Iterator[GapRow], state: GroupState[Option[Double]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val batch = it.toArray.sortBy(r => (r.secs, r.event_id))
-            var last: Option[Double] = state.getOption.flatten
-            val out = batch.map { r =>
-              if (r.v.isDefined) last = r.v
-              FilledRow(r.event_id, key, r.secs, r.v,
-                if (r.v.isDefined) r.v else last, r.v.isEmpty)
-            }
-            state.update(last)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            out.iterator
+          val batch = it.toArray.sortBy(r => (r.secs, r.event_id))
+          var last: Option[Double] = state.getOption.flatten
+          val out = batch.map { r =>
+            if (r.v.isDefined) last = r.v
+            FilledRow(r.event_id, key, r.secs, r.v,
+              if (r.v.isDefined) r.v else last, r.v.isEmpty)
           }
+          state.update(last)
+          out.iterator
       }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Per-key bounded recent-outlier table state. */
@@ -19,8 +19,7 @@ case class OutlierTableState(rows: Vector[Flagged])
   *
   * Scale: state and per-batch output are O(cap) per key; keys hash-
   * partition across executors, so the operator scales with entity
-  * cardinality, never event volume. `idleTimeout` evicts tables for
-  * entities that stop reporting.
+  * cardinality, never event volume.
   *
   * Composition note: Spark allows only one non-append stateful operator
   * per streaming query, so this cannot chain after the (also stateful)
@@ -46,24 +45,10 @@ object OutlierTable {
   /** Maintain the capped per-key table over a flagged-outlier stream
     * (SlidingDetector.detect output or any Dataset[Flagged]). Emits the
     * full refreshed snapshot of every key seen in the micro-batch. */
-  def table(flagged: Dataset[Flagged], cap: Int = DefaultCap,
-      idleTimeout: Option[String] = None)(
-      implicit s: SparkSession): Dataset[Flagged] = {
-    import s.implicits._
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
+  def table(flagged: Dataset[Flagged], cap: Int = DefaultCap): Dataset[Flagged] = {
+    import flagged.sparkSession.implicits._
     flagged.groupByKey(_.plant_type)
-      .flatMapGroupsWithState(OutputMode.Update, timeoutConf) {
-        (key: String, rows: Iterator[Flagged], state: GroupState[OutlierTableState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val out = mergeGroup(cap)(key, rows, state)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            out
-          }
-      }
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
+        mergeGroup(cap))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupStateTimeout, GroupState, OutputMode}
 
 import graft.ml.GraftIsolationForest
@@ -156,30 +156,13 @@ object SlidingDetector {
   }
 
   /** Wire the detector over a parsed telemetry Dataset (streaming or
-    * batch — same code path, which is what the specs exercise).
-    *
-    * `idleTimeout` (e.g. "1 hour") evicts state for keys that stop
-    * sending — with unbounded key cardinality (devices come and go)
-    * per-key ring buffers would otherwise accumulate forever in the
-    * state store. None keeps state indefinitely (the reference's fixed
-    * plant_type universe). */
-  def detect(parsed: Dataset[Reading], idleTimeout: Option[String] = None)(
-      implicit s: SparkSession): Dataset[Flagged] = {
-    import s.implicits._
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
+    * batch — same code path, which is what the specs exercise). State
+    * is kept per key indefinitely: the reference's plant_type universe
+    * is fixed. */
+  def detect(parsed: Dataset[Reading]): Dataset[Flagged] = {
+    import parsed.sparkSession.implicits._
     parsed.groupByKey(_.plant_type)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-        (key: String, rows: Iterator[Reading], state: GroupState[RingState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val out = detectGroup(key, rows, state)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            out
-          }
-      }
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        detectGroup)
   }
 }

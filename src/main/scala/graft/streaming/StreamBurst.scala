@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** A (type, event-time) tick — the only columns burst detection needs. */
@@ -76,9 +76,8 @@ object StreamBurst {
 
   /** Wire burst detection over a parsed (event_type, ts) stream (or a
     * batch frame — same code path, the twin-spec trick). */
-  def detect(parsed: Dataset[TypedTick])(
-      implicit s: SparkSession): Dataset[BurstAlert] = {
-    import s.implicits._
+  def detect(parsed: Dataset[TypedTick]): Dataset[BurstAlert] = {
+    import parsed.sparkSession.implicits._
     parsed.groupByKey(_.event_type)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         detectGroup)

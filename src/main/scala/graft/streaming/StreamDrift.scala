@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.EventOps.{micro6, microsToDouble}
+
 /** Keyed scalar reading for the drift screen (string-keyed twin of
   * EventRow — e18 keys on event_type where a2/st13 key on user_id). */
 case class KeyedEvent(key: String, event_id: Long, secs: Long, value: Double)
@@ -39,65 +41,45 @@ case class DriftBuf(ids: Array[Long], vals: Array[Double], micros: Array[Long])
   *
   * Scale: O(W) state per key (2W−1 readings — the two-sided window IS
   * the state lower bound), hash-partitioned; per-row work is O(W)
-  * integer adds, matching the batch row-frame. Idle keys evict on
-  * timeout; a reappearing key re-warms over its next 2W readings. */
+  * integer adds, matching the batch row-frame. */
 object StreamDrift {
 
   private def round6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  private def micro6(x: Double): Long =
-    (BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-      * BigDecimal(1000000)).toLongExact
-
-  /** Exact decimal(…,6) → double: one correctly-rounded cast, the same
-    * step as the batch scan's `.cast("double")` on the window sum. */
-  private def microsToDouble(sum: Long): Double =
-    new java.math.BigDecimal(java.math.BigInteger.valueOf(sum), 6).doubleValue()
-
-  def detect(rows: Dataset[KeyedEvent], w: Int = 50,
-      idleTimeout: Option[String] = None): Dataset[ShiftRow] = {
+  def detect(rows: Dataset[KeyedEvent], w: Int = 50): Dataset[ShiftRow] = {
     import rows.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     rows.groupByKey(_.key)
       .flatMapGroupsWithState[DriftBuf, ShiftRow](
-        OutputMode.Append, timeoutConf) {
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: String, it: Iterator[KeyedEvent], state: GroupState[DriftBuf]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val st = state.getOption.getOrElse(
-              DriftBuf(Array.empty, Array.empty, Array.empty))
-            val ids = scala.collection.mutable.ArrayBuffer.from(st.ids)
-            val vals = scala.collection.mutable.ArrayBuffer.from(st.vals)
-            val micros = scala.collection.mutable.ArrayBuffer.from(st.micros)
-            val out = Vector.newBuilder[ShiftRow]
-            it.toArray.sortBy(r => (r.secs, r.event_id)).foreach { r =>
-              ids += r.event_id
-              vals += r.value
-              micros += micro6(r.value)
-              val len = ids.length
-              if (len >= 2 * w) {
-                // the row W back now has a complete after-window
-                val c = len - w
-                var sb = 0L
-                var sa = 0L
-                var i = c - w
-                while (i < c) { sb += micros(i); i += 1 }
-                while (i < len) { sa += micros(i); i += 1 }
-                val shift = microsToDouble(sa) / w - microsToDouble(sb) / w
-                out += ShiftRow(ids(c), key, vals(c), round6(shift))
-              }
+          val st = state.getOption.getOrElse(
+            DriftBuf(Array.empty, Array.empty, Array.empty))
+          val ids = scala.collection.mutable.ArrayBuffer.from(st.ids)
+          val vals = scala.collection.mutable.ArrayBuffer.from(st.vals)
+          val micros = scala.collection.mutable.ArrayBuffer.from(st.micros)
+          val out = Vector.newBuilder[ShiftRow]
+          it.toArray.sortBy(r => (r.secs, r.event_id)).foreach { r =>
+            ids += r.event_id
+            vals += r.value
+            micros += micro6(r.value)
+            val len = ids.length
+            if (len >= 2 * w) {
+              // the row W back now has a complete after-window
+              val c = len - w
+              var sb = 0L
+              var sa = 0L
+              var i = c - w
+              while (i < c) { sb += micros(i); i += 1 }
+              while (i < len) { sa += micros(i); i += 1 }
+              val shift = microsToDouble(sa) / w - microsToDouble(sb) / w
+              out += ShiftRow(ids(c), key, vals(c), round6(shift))
             }
-            val keep = math.max(0, ids.length - (2 * w - 1))
-            state.update(DriftBuf(ids.drop(keep).toArray,
-              vals.drop(keep).toArray, micros.drop(keep).toArray))
-            idleTimeout.foreach(state.setTimeoutDuration)
-            out.result().iterator
           }
+          val keep = math.max(0, ids.length - (2 * w - 1))
+          state.update(DriftBuf(ids.drop(keep).toArray,
+            vals.drop(keep).toArray, micros.drop(keep).toArray))
+          out.result().iterator
       }
   }
 }

@@ -23,39 +23,27 @@ import graft.operators.{EventRow, EwmaRow}
   * source's responsibility.
   *
   * Scale: one double per key, hash-partitioned; the only shuffle is
-  * the groupByKey exchange. `idleTimeout` evicts keys that stop
-  * sending — a reappearing key re-initializes at its next reading,
-  * the right call after a long outage.
+  * the groupByKey exchange.
   */
 object StreamEwma {
 
-  def smooth(rows: Dataset[EventRow], alpha: Double = 0.3,
-      idleTimeout: Option[String] = None): Dataset[EwmaRow] = {
+  def smooth(rows: Dataset[EventRow], alpha: Double = 0.3): Dataset[EwmaRow] = {
     import rows.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     rows.groupByKey(_.user_id)
       .flatMapGroupsWithState[Option[Double], EwmaRow](
-        OutputMode.Append, timeoutConf) {
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: Long, it: Iterator[EventRow], state: GroupState[Option[Double]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val batch = it.toArray.sortBy(r => (r.secs, r.event_id))
-            var ew = state.getOption.flatten.getOrElse(Double.NaN)
-            val out = batch.map { r =>
-              if (ew.isNaN) ew = r.value
-              val resid = r.value - ew
-              ew = alpha * r.value + (1 - alpha) * ew
-              EwmaRow(r.event_id, key, r.value,
-                math.rint(ew * 1e6) / 1e6, math.rint(resid * 1e6) / 1e6)
-            }
-            state.update(if (ew.isNaN) None else Some(ew))
-            idleTimeout.foreach(state.setTimeoutDuration)
-            out.iterator
+          val batch = it.toArray.sortBy(r => (r.secs, r.event_id))
+          var ew = state.getOption.flatten.getOrElse(Double.NaN)
+          val out = batch.map { r =>
+            if (ew.isNaN) ew = r.value
+            val resid = r.value - ew
+            ew = alpha * r.value + (1 - alpha) * ew
+            EwmaRow(r.event_id, key, r.value,
+              math.rint(ew * 1e6) / 1e6, math.rint(resid * 1e6) / 1e6)
           }
+          state.update(if (ew.isNaN) None else Some(ew))
+          out.iterator
       }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Emitted feed-gap alert: key went quiet from `gap_start` (the minute
@@ -16,10 +16,8 @@ case class GapState(lastMin: Long)
   * LIVE feed-gap monitor. e21 measures coverage after the fact; this
   * alerts the moment a stalled feed RESUMES, reporting exactly which
   * minutes went missing (the e13/e15 repair range) — one long of
-  * state per key. A feed that stalls and never resumes needs a
-  * processing-time dimension by definition (no arriving event can
-  * witness it): pass `stallTimeout` to also evict-and-rearm silent
-  * keys via group-state timeouts, the st8 idle-key discipline.
+  * state per key. A feed that stalls and never resumes raises no
+  * alert: no arriving event can witness it.
   *
   * Scale: state is ONE long per key; alerts are emitted only on
   * resumption, so output tracks actual gaps, not traffic. Late events
@@ -49,26 +47,11 @@ object StreamGap {
     out.result().iterator
   }
 
-  /** Wire gap detection over a parsed (event_type, ts) stream.
-    * `stallTimeout` (e.g. "10 minutes") evicts keys that stop sending
-    * entirely so a resumed feed re-arms against a fresh baseline. */
-  def detect(parsed: Dataset[TypedTick], stallTimeout: Option[String] = None)(
-      implicit s: SparkSession): Dataset[GapAlert] = {
-    import s.implicits._
-    val timeoutConf =
-      if (stallTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
+  /** Wire gap detection over a parsed (event_type, ts) stream. */
+  def detect(parsed: Dataset[TypedTick]): Dataset[GapAlert] = {
+    import parsed.sparkSession.implicits._
     parsed.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-        (key: String, rows: Iterator[TypedTick], state: GroupState[GapState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val out = detectGroup(key, rows, state)
-            stallTimeout.foreach(state.setTimeoutDuration)
-            out
-          }
-      }
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        detectGroup)
   }
 }

@@ -21,44 +21,33 @@ import graft.operators.{EventRow, HoltRow}
   *
   * Ordering: rows within a micro-batch sort by (secs, event_id) per
   * key; cross-batch order is the source's responsibility (the st8/st9
-  * contract). Idle keys evict on timeout and re-seed at their next
-  * reading.
+  * contract).
   */
 object StreamHolt {
 
   def smooth(rows: Dataset[EventRow], alpha: Double = 0.3,
-      beta: Double = 0.1,
-      idleTimeout: Option[String] = None): Dataset[HoltRow] = {
+      beta: Double = 0.1): Dataset[HoltRow] = {
     import rows.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     rows.groupByKey(_.user_id)
       .flatMapGroupsWithState[Option[(Double, Double)], HoltRow](
-        OutputMode.Append, timeoutConf) {
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: Long, it: Iterator[EventRow],
             state: GroupState[Option[(Double, Double)]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val batch = it.toArray.sortBy(r => (r.secs, r.event_id))
-            var st = state.getOption.flatten
-            val out = batch.map { r =>
-              val (l0, b0) = st.getOrElse((r.value, 0.0))
-              val f = l0 + b0
-              val resid = r.value - f
-              val lNew = alpha * r.value + (1 - alpha) * (l0 + b0)
-              val bNew = beta * (lNew - l0) + (1 - beta) * b0
-              st = Some((lNew, bNew))
-              HoltRow(r.event_id, key, r.value,
-                math.rint(lNew * 1e6) / 1e6, math.rint(bNew * 1e6) / 1e6,
-                math.rint(resid * 1e6) / 1e6)
-            }
-            state.update(st)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            out.iterator
+          val batch = it.toArray.sortBy(r => (r.secs, r.event_id))
+          var st = state.getOption.flatten
+          val out = batch.map { r =>
+            val (l0, b0) = st.getOrElse((r.value, 0.0))
+            val f = l0 + b0
+            val resid = r.value - f
+            val lNew = alpha * r.value + (1 - alpha) * (l0 + b0)
+            val bNew = beta * (lNew - l0) + (1 - beta) * b0
+            st = Some((lNew, bNew))
+            HoltRow(r.event_id, key, r.value,
+              math.rint(lNew * 1e6) / 1e6, math.rint(bNew * 1e6) / 1e6,
+              math.rint(resid * 1e6) / 1e6)
           }
+          state.update(st)
+          out.iterator
       }
   }
 }

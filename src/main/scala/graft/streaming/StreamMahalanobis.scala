@@ -98,53 +98,43 @@ object StreamMahalanobis {
   /** Emit a flag for every post-warm-up reading with d² > `threshold`
     * (χ²-style cut; 12 ≈ the 99.75% tail at 2 dof). */
   def detect(rows: Dataset[VecReading], warmup: Int = 200,
-      threshold: Double = 12.0,
-      idleTimeout: Option[String] = None): Dataset[MahaFlag] = {
+      threshold: Double = 12.0): Dataset[MahaFlag] = {
     import rows.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     rows.groupByKey(_.key)
       .flatMapGroupsWithState[MahaState, MahaFlag](
-        OutputMode.Append, timeoutConf) {
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: String, it: Iterator[VecReading], state: GroupState[MahaState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val batch = it.toArray.sortBy(r => (r.secs, r.event_id))
-            if (batch.isEmpty) Iterator.empty
-            else {
-              val d = batch.head.features.length
-              var st = state.getOption.getOrElse(
-                MahaState(0L, new Array[Double](d),
-                  Array.fill(d)(new Array[Double](d)), None, Array.empty))
-              val out = Vector.newBuilder[MahaFlag]
-              batch.foreach { r =>
-                if (st.inv.isEmpty && st.n < warmup) {
-                  st = welfordStep(st, r.features)
-                  if (st.n == warmup) st = freeze(st)
-                } else st.inv.foreach { inv =>
-                  val delta = Array.tabulate(d)(i => r.features(i) - st.mean(i))
-                  var d2 = 0.0
-                  var i = 0
-                  while (i < d) {
-                    var j = 0
-                    while (j < d) { d2 += delta(i) * inv(i)(j) * delta(j); j += 1 }
-                    i += 1
-                  }
-                  if (d2 > threshold) {
-                    val maxZ = (0 until d).map(i =>
-                      if (st.sd(i) > 0) math.abs(delta(i)) / st.sd(i) else 0.0).max
-                    out += MahaFlag(key, r.event_id, r.secs,
-                      math.rint(d2 * 1e6) / 1e6, math.rint(maxZ * 1e6) / 1e6)
-                  }
+          val batch = it.toArray.sortBy(r => (r.secs, r.event_id))
+          if (batch.isEmpty) Iterator.empty
+          else {
+            val d = batch.head.features.length
+            var st = state.getOption.getOrElse(
+              MahaState(0L, new Array[Double](d),
+                Array.fill(d)(new Array[Double](d)), None, Array.empty))
+            val out = Vector.newBuilder[MahaFlag]
+            batch.foreach { r =>
+              if (st.inv.isEmpty && st.n < warmup) {
+                st = welfordStep(st, r.features)
+                if (st.n == warmup) st = freeze(st)
+              } else st.inv.foreach { inv =>
+                val delta = Array.tabulate(d)(i => r.features(i) - st.mean(i))
+                var d2 = 0.0
+                var i = 0
+                while (i < d) {
+                  var j = 0
+                  while (j < d) { d2 += delta(i) * inv(i)(j) * delta(j); j += 1 }
+                  i += 1
+                }
+                if (d2 > threshold) {
+                  val maxZ = (0 until d).map(i =>
+                    if (st.sd(i) > 0) math.abs(delta(i)) / st.sd(i) else 0.0).max
+                  out += MahaFlag(key, r.event_id, r.secs,
+                    math.rint(d2 * 1e6) / 1e6, math.rint(maxZ * 1e6) / 1e6)
                 }
               }
-              state.update(st)
-              idleTimeout.foreach(state.setTimeoutDuration)
-              out.result().iterator
             }
+            state.update(st)
+            out.result().iterator
           }
       }
   }

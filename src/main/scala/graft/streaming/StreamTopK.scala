@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One heavy-hitter counter: estimate and its maximum overestimate. */
@@ -48,9 +48,9 @@ object StreamTopK {
     }
 
   /** Run the sketch over a streaming Dataset of tokens. */
-  def topK(tokens: Dataset[String], groups: Int = 8, capacity: Int = 64)(
-      implicit s: SparkSession): Dataset[TokenEstimate] = {
-    import s.implicits._
+  def topK(tokens: Dataset[String], groups: Int = 8,
+      capacity: Int = 64): Dataset[TokenEstimate] = {
+    import tokens.sparkSession.implicits._
     tokens.groupByKey(t => math.floorMod(t.hashCode, groups))
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (grp: Int, toks: Iterator[String], state: GroupState[SpaceSavingSketch]) =>

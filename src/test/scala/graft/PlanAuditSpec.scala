@@ -610,4 +610,23 @@ class PlanAuditSpec extends SparkSpec {
     assert(knobs.isEmpty,
       s"session env variables read outside GraftSession:\n${knobs.mkString("\n")}")
   }
+
+  test("the env variables main reads are the eight documented in OPERATIONS.md") {
+    // an undocumented variable is an option no test or benchmark turns
+    // on; a new one joins OPERATIONS.md's knob table and this set
+    val Name = """"((?:SPARK_)?GRAFT_\w+)"""".r
+    val names = mainSourceHits(Name.regex)
+      .flatMap(h => Name.findAllMatchIn(h).map(_.group(1))).toSet
+    assert(names == Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+      "SPARK_GRAFT_MAX_PARTITION_BYTES", "SPARK_GRAFT_IO_CODEC",
+      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_ONLY", "SPARK_GRAFT_PASSES",
+      "SPARK_GRAFT_LINEITEM_CHUNKS"), s"env variables in main: $names")
+  }
+
+  test("keyed stateful operators set no processing-time timeouts") {
+    // every flatMapGroupsWithState keeps state per key with NoTimeout;
+    // a timeout branch no caller enables ships without ever running
+    val hits = mainSourceHits("""ProcessingTimeTimeout|setTimeoutDuration|hasTimedOut""")
+    assert(hits.isEmpty, s"group-state timeouts in main:\n${hits.mkString("\n")}")
+  }
 }
