@@ -238,8 +238,8 @@ def bound_t12(got):
     """Unigram-LM cross-entropy: n_words exact-equal, xent within the
     6-dp rounding half-ulp (5e-7) + cross-engine libm slack (1e-9) of
     DuckDB's exact recompute — the inequality form of the oracle the
-    r9 margin measurement adjudicated hash-unsafe (BASELINE_SELF
-    §t12-margin)."""
+    r9 margin measurement adjudicated hash-unsafe
+    (`git show acf731b:BASELINE_SELF.md` §t12-margin)."""
     exp = run_oracle("""
       WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
                  FROM documents),

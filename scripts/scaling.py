@@ -1,13 +1,13 @@
 #!/usr/bin/env python3
 """Scaling-exponent analysis: compare a sf1 bench sweep against the
-sf0.1 BASELINE_SELF numbers. For data growing 10x, a query scaling as
+sf0.1 seconds of bench_gate.tsv. For data growing 10x, a query scaling as
 n^p takes 10^p times longer, so p = log10(t_sf1 / t_sf0.1). Queries on
 `embeddings` grow 4x per decade instead (driver series), so their
 exponent uses log4. Fixed per-query overhead (~0.1-0.2 s of job setup
 at sf0.1) inflates apparent sublinearity; we report raw ratios plus the
 overhead-adjusted exponent with OVERHEAD subtracted from both sides.
 Usage: scaling.py <bench_sf1.out> [overhead_sec=0.08]"""
-import json, math, re, sys
+import csv, json, math, os, sys
 
 OVERHEAD = float(sys.argv[2]) if len(sys.argv) > 2 else 0.08
 
@@ -17,13 +17,11 @@ EMB = {"a3_kmeans_outlier", "a7_pca_outlier", "d5_embed_neardup",
        "s4_ann_pq", "s5_filtered_ann", "s6_knn_graph",
        "s7_hard_negatives", "s8_range_search"}
 
-base = {}
-for line in open("BASELINE_SELF.md"):
-    if line.startswith("## sf1"):  # gate section only, not sf1 reference
-        break
-    m = re.match(r"\|\s*([a-z]\w+)\s*\|\s*([0-9.]+)\s*\|", line)
-    if m:
-        base[m.group(1)] = float(m.group(2))  # later rows override
+GATE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
+                    "bench_gate.tsv")
+with open(GATE, newline="") as f:
+    base = {r["query"]: float(r["sec"])
+            for r in csv.DictReader(f, delimiter="\t")}
 
 sf1 = None
 for line in open(sys.argv[1]):
@@ -33,10 +31,11 @@ for line in open(sys.argv[1]):
         break
 qs = {k: v for k, v in sf1["queries"].items() if v >= 0}
 
-rows = []
+rows, ungated = [], []
 for q, t1 in sorted(qs.items()):
     t0 = base.get(q)
-    if not t0:
+    if t0 is None:
+        ungated.append(q)
         continue
     growth = 4.0 if q in EMB else 10.0
     ratio = t1 / t0
@@ -54,3 +53,5 @@ total1 = sum(r[2] for r in rows)
 print(f"\ntotals: sf0.1 {total0:.1f}s -> sf1 {total1:.1f}s "
       f"({total1/total0:.1f}x, {len(rows)} queries compared)")
 print("failed:", sf1.get("failed"))
+if ungated:
+    print("no gate row:", ungated)

@@ -27,7 +27,7 @@ object Bench {
     val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(3)
     val names = SparkEntry.queries.toSeq.sortBy(_._1).map(_._1)
       .filter(n => only.forall(_.contains(n)))
-    val gateBase = loadBaseline()
+    val gate = loadGate()
     val samples = scala.collection.mutable.Map[String, List[Double]]()
       .withDefaultValue(Nil)
     // Per-query volume capture on pass 1 ONLY (r12, VERDICT r11 item 3):
@@ -47,7 +47,7 @@ object Bench {
       // pass instead of 1 (min-of-7 overall at the default 3 passes).
       // Pass 1 stays single-shot — it carries the volume capture, and an
       // inner repeat there would bleed repeat stages into the capture.
-      val reps = if (pass == 1) 1 else innerReps(gateBase.get(name))
+      val reps = if (pass == 1) 1 else innerReps(gate.get(name).map(_.sec))
       var rep = 0
       var failed = false
       while (rep < reps && !failed) {
@@ -72,8 +72,7 @@ object Bench {
           if (pass == 1) {
             val t = vol.snapshotAndReset()
             volumes(name) = t
-            // markdown-row form so a recording sweep pastes straight into
-            // BASELINE_SELF.md's volume table
+            // the wmb/wrec/pkmb columns of the query's bench_gate.tsv row
             System.err.println(s"[vol] | $name | ${t.writeBytes / 1048576} | " +
               s"${t.writeRecords} | ${t.peakMemBytes / 1048576} |")
           }
@@ -98,51 +97,57 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}""")
-    // Self-adjudicate against BASELINE_SELF.md and print the verdict as
-    // the FINAL compact line: the round artifact keeps only the LAST 2 KB
-    // of stdout, so the 2× gate must fit there whole — the per-query map
-    // above is detail, this line is the judgment for ALL queries.
-    // only comparable at the baseline's own protocol scale.
-    // volume_verdict FIRST, baseline_verdict LAST: the round artifact
-    // keeps the final 2 KB of stdout and the wall gate is the judgment
-    // line; the volume line is its host-independent adjudicator — a
-    // query in over2x but NOT in volume drift moved with the HOST, not
-    // the plan (bytes/records are plan-determined; wall is not).
+    // Self-adjudicate against bench_gate.tsv, only comparable at the
+    // gate's own protocol scale: the per-query map above is detail,
+    // baseline_verdict (printed last) is the 2× judgment for ALL
+    // queries, and volume_verdict is its host-independent adjudicator
+    // — a query in over2x but NOT in volume drift moved with the HOST,
+    // not the plan (bytes/records are plan-determined; wall is not).
     if (sfDir.replaceAll("/+$", "").endsWith("sf0.1")) {
       val measured = results.collect { case (q, t) if t >= 0 => q }
-      volumeVerdict(volumes.toMap, measured = measured).foreach(println)
-      baselineVerdict(results, total).foreach(println)
+      volumeVerdict(volumes.toMap, gate, measured).foreach(println)
+      baselineVerdict(results, total, gate).foreach(println)
     }
     spark.stop()
   }
 
-  /** Parse the `| query | wmb | wrec | pkmb |` volume table out of
-    * BASELINE_SELF.md (marker heading `## Volume table (authoritative`,
-    * same one-authoritative-table discipline as the gate table). */
-  private[graft] def loadVolumeBaseline(path: String = "BASELINE_SELF.md")
-      : Map[String, (Long, Long, Long)] = {
-    val Row = """\|\s*([a-z]\w+)\s*\|\s*(\d+)\s*\|\s*(\d+)\s*\|\s*(\d+)\s*\|""".r
-    authoritativeLines(path, "## Volume table (authoritative")
-      .collect { case Row(q, wmb, wrec, pk) =>
-        q -> ((wmb.toLong, wrec.toLong, pk.toLong)) }.toMap
-  }
+  /** One query's gate row: the sf0.1 min-of-N seconds the 2× wall gate
+    * compares against, and the pass-1 shuffle write MB, shuffle write
+    * records and peak execution MB the volume verdict compares
+    * against. */
+  private[graft] case class GateRow(sec: Double, wmb: Long, wrec: Long,
+      pkmb: Long)
 
-  /** The lines of the ONE authoritative table under its `marker`
-    * heading in `path` (r8, ADVICE r7): historical/superseded tables
-    * elsewhere in the file never feed the gate, so insertion order
-    * can't silently change baselines. Empty when the file or the
-    * marker is missing. */
-  private def authoritativeLines(path: String, marker: String): Seq[String] = {
+  private val GateHeader = "query\tsec\twmb\twrec\tpkmb"
+
+  /** The gate file: the header line, then one tab-separated row per
+    * query. Empty when the file is missing. A row that does not parse
+    * (wrong column count, non-numeric field, duplicate query) throws
+    * with the file and line: a dropped row would silently shrink
+    * n_compared. */
+  private[graft] def loadGate(path: String = "bench_gate.tsv")
+      : Map[String, GateRow] = {
     val f = new java.io.File(path)
-    if (!f.exists()) Nil
-    else {
-      val lines = new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        .linesIterator.toSeq
-      val auth = lines.indexWhere(_.startsWith(marker))
-      if (auth < 0) Nil
-      else lines.drop(auth + 1).takeWhile(!_.startsWith("## "))
-    }
+    if (!f.exists()) return Map.empty
+    val Sec = """\d+(?:\.\d+)?""".r
+    val Count = """\d+""".r
+    val lines = scala.io.Source.fromFile(f, "UTF-8")
+    try lines.getLines().zipWithIndex.foldLeft(Map.empty[String, GateRow]) {
+      case (gate, (line, i)) =>
+        def bad(why: String) =
+          throw new IllegalArgumentException(s"$path:${i + 1}: $why: $line")
+        line.split("\t", -1) match {
+          case _ if i == 0 =>
+            if (line != GateHeader) bad(s"header is not $GateHeader")
+            gate
+          case Array(q, _, _, _, _) if gate.contains(q) =>
+            bad(s"duplicate query $q")
+          case Array(q, s @ Sec(), w @ Count(), r @ Count(), p @ Count()) =>
+            gate + (q -> GateRow(s.toDouble, w.toLong, r.toLong, p.toLong))
+          case Array(_, _, _, _, _) => bad("non-numeric field")
+          case cols => bad(s"${cols.length} columns, expected 5")
+        }
+    } finally lines.close()
   }
 
   /** Inner-repeat count for one query within a bench pass (r13,
@@ -162,8 +167,8 @@ object Bench {
     if (baseSec.exists(_ < 0.55)) 3 else 1
 
   /** The host-independent verdict: pass-1 shuffle write MB + records +
-    * peak execution memory per query vs BASELINE_SELF.md's volume
-    * table. Drift thresholds absorb what legitimately wobbles
+    * peak execution memory per query vs the gate file's volume
+    * columns. Drift thresholds absorb what legitimately wobbles
     * run-to-run (AQE coalesce / join-flip timing on the iterative-CC
     * family, MB rounding on tiny queries): records drift = >1%
     * relative AND >1000 absolute; byte drift = >15% relative AND
@@ -173,13 +178,13 @@ object Bench {
     * interleaving legitimately moves the per-stage concurrent peak.
     * A wall-gate breach whose query is ABSENT from this line's drift
     * list is self-adjudicated as host weather. Capped at the 4
-    * largest drifts so the line fits the artifact's 2 KB stdout tail.
+    * largest drifts so the line stays one compact row.
     * `measured` (ADVICE r12): wall-timed queries with NO volume row
     * (pass-1 failure, later-pass success) are named in `vol_missing`
     * instead of silently shrinking n_compared. */
   private[graft] def volumeVerdict(
       volumes: Map[String, VolumeListener.Totals],
-      base: Map[String, (Long, Long, Long)] = loadVolumeBaseline(),
+      base: Map[String, GateRow],
       measured: Seq[String] = Nil)
       : Option[String] = {
     if (base.isEmpty || volumes.isEmpty) return None
@@ -187,7 +192,7 @@ object Bench {
     if (compared.isEmpty) return None
     def drifted(q: String): Option[(String, Double)] = {
       val t = volumes(q)
-      val (bMB, bRec, _) = base(q)
+      val GateRow(_, bMB, bRec, _) = base(q)
       val wmb = t.writeBytes / 1048576
       val recRel =
         if (bRec == 0) (if (t.writeRecords == 0) 0.0 else 1.0)
@@ -203,10 +208,8 @@ object Bench {
         math.max(recRel, mbRel)))
     }
     val drifts = compared.flatMap(drifted)
-    val recExact = compared.count(q => volumes(q).writeRecords == base(q)._2)
-    // 4 entries keeps this line + the worst-case baseline_verdict
-    // (~1.5 KB on a 6-breach day) inside the artifact's 2 KB stdout
-    // tail — n_drift still reports the full count
+    val recExact = compared.count(q => volumes(q).writeRecords == base(q).wrec)
+    // n_drift still reports the full count
     val top = drifts.sortBy(-_._2).take(4).map(_._1).mkString("[", ",", "]")
     val retries = volumes.values.map(_.stageRetries).sum
     // peak-execution-memory band: plan-determined like the byte counts
@@ -215,7 +218,7 @@ object Bench {
     // with task interleaving — hence the wider 30%/64 MB band
     val pkDrifts = compared.flatMap { q =>
       val pk = volumes(q).peakMemBytes / 1048576
-      val bpk = base(q)._3
+      val bpk = base(q).pkmb
       val rel = if (bpk == 0) (if (pk == 0) 0.0 else 1.0)
         else math.abs(pk - bpk).toDouble / bpk
       if (rel > 0.30 && math.abs(pk - bpk) > 64)
@@ -231,13 +234,6 @@ object Bench {
       s""""rec_exact":$recExact,"n_drift":${drifts.size},"drift":$top,""" +
       s""""pk_drift":${pkDrifts.size},"pkd":$pkTop,""" +
       s""""vol_missing":$volMissing,"stage_retries":$retries}""")
-  }
-
-  /** Parse the `| query | sec |` table out of BASELINE_SELF.md. */
-  private[graft] def loadBaseline(path: String = "BASELINE_SELF.md"): Map[String, Double] = {
-    val Row = """\|\s*([a-z]\w+)\s*\|\s*([0-9.]+)\s*\|""".r
-    authoritativeLines(path, "## Gate table (authoritative")
-      .collect { case Row(q, s) => q -> s.toDouble }.toMap
   }
 
   /** The ambient-host calibration controls (r10, VERDICT r9 item 3):
@@ -297,12 +293,12 @@ object Bench {
   /** The compact gate line: per-query ratios vs the standing baseline,
     * worst five, every query over the documented 2× criterion, and the
     * host_index with host-adjusted ratios (`adj` = ratio / host_index)
-    * so a slow-host sweep reads as such IN the artifact instead of
+    * so a slow-host sweep reads as such IN the output instead of
     * costing a per-round forensic (OPERATIONS.md re-base rule).
     * Applies only at the baseline's own protocol scale (sf0.1). */
   private[graft] def baselineVerdict(results: Seq[(String, Double)],
-      total: Double): Option[String] = {
-    val base = loadBaseline()
+      total: Double, gate: Map[String, GateRow]): Option[String] = {
+    val base = gate.map { case (q, r) => q -> r.sec }
     if (base.isEmpty) return None
     val ratios = results.collect {
       case (q, t) if t >= 0 && base.contains(q) => (q, t, base(q), t / base(q))

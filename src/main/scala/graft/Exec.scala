@@ -20,8 +20,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    single-scan claims being audited DEPEND on those caches;
   *    PlanAuditSpec descends into cached plans and clears the cache
   *    afterwards).
-  * `.cache()` itself is NEVER gated — cache boundaries are part of
-  * the plan shape under audit. Answers are identical either way; the
+  * Operators call `.cache()` directly: it is NEVER gated, because
+  * cache boundaries are part of the plan shape under audit. Answers are identical either way; the
   * flag exists for plan inspection, not production runs.
   */
 object Exec {
@@ -32,10 +32,6 @@ object Exec {
     s.conf.getOption(Key).forall(!_.trim.equalsIgnoreCase("false"))
 
   implicit class MatOps[T](private val ds: Dataset[T]) extends AnyVal {
-    /** `.cache()` — not gated (see object scaladoc); kept as the
-      * library-wide spelling so the lifecycle trio reads uniformly. */
-    def cacheIf(): Dataset[T] = ds.cache()
-
     /** Eager `.localCheckpoint(true)` honoring [[Key]] (identity when
       * materialization is off — the full plan stays inspectable). */
     def finishIf(): Dataset[T] =

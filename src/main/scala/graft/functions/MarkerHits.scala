@@ -33,8 +33,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Bit-identical to the composed form — pinned by MarkerHitsSpec
   * (crafted sentences, multi-space/empty/unicode/overlong tokens,
   * seeded random corpora) and by the unchanged t1/t15 DuckDB oracles.
-  * Measured (v2 harness, re-based min-of-N at sf10 — the standing
-  * BASELINE_SELF numbers): t1 49.5 → 3.2 s, t15 18.0 → 3.1 s (the
+  * Measured (v2 harness, re-based min-of-N at sf10 — the
+  * `git show acf731b:BASELINE_SELF.md` numbers): t1 49.5 → 3.2 s, t15 18.0 → 3.1 s (the
   * first in-session reading was 6.5/6.6 s; min-of-N across later
   * passes settled lower). */
 case class MarkerHits(child: Expression) extends UnaryExpression {

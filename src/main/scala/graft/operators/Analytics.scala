@@ -371,7 +371,7 @@ object Analytics {
   def q18SketchRollup(s: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(s, dir).select(col("o_orderstatus"), col("o_custkey"))
     val perGroup = o.groupBy("o_orderstatus")
-      .agg(expr("hll_sketch_agg(o_custkey)").as("sk")).cacheIf()
+      .agg(expr("hll_sketch_agg(o_custkey)").as("sk")).cache()
     val grp = perGroup.select(col("o_orderstatus"),
       expr("hll_sketch_estimate(sk)").as("n_cust_est"))
     val all = perGroup
@@ -452,7 +452,7 @@ object Analytics {
       maxGridCells: Long = 1L << 22): DataFrame = {
     // NOT cached, deliberately: the suite reads the 4-column fact
     // three times (guard agg, count grid, rank pass) and the e17-style
-    // cacheIf() of the projection was tried and REVERTED — at sf100
+    // .cache() of the projection was tried and REVERTED — at sf100
     // (600M rows) building the columnar cache plus the storage pool's
     // squeeze on the rank shuffle measured 281 s cold vs 229 s for the
     // three pruned parquet scans (measured-no-win-revert, r7 s2)
@@ -609,7 +609,8 @@ object Analytics {
     * per-group value buffering, whose merge runs on |groups| cores and
     * O(n) memory: at sf1 the builtin's 3-core merge was the whole
     * sweep's most expensive query (23.4 s; the selection form measures
-    * the same result in ~1/5th of that — see BASELINE_SELF). Small
+    * the same result in ~1/5th of that — see
+    * `git show acf731b:BASELINE_SELF.md`). Small
     * inputs (every group ≤ smallN) take the buffered builtin unchanged. */
   def q9Percentile(s: SparkSession, dir: String): DataFrame = {
     if (Pct.approxEnabled(s))

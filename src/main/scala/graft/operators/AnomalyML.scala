@@ -104,7 +104,7 @@ object AnomalyML {
     // feeds BOTH the contamination-quantile cut and the flag join —
     // uncached it runs twice (the a3 lesson, ADVICE r1)
     val scored = ev.withColumn("score", scoreCol)
-      .cacheIf()
+      .cache()
     // cut rounded to 6 dp: both engines' exact-percentile interpolation
     // can differ in the last ulp, and the cut sits in a FILTER — rounding
     // makes the cut value itself engine-stable (the q9 discipline),
@@ -151,7 +151,7 @@ object AnomalyML {
       val n = e.count()
       val trainFrac = math.min(1.0, 100000.0 / math.max(n, 1L))
       val train = Sampling.uniform(e, col("vec_id"), trainFrac)
-        .select(col("features")).coalesce(8).cacheIf()
+        .select(col("features")).coalesce(8).cache()
       val model = new KMeans().setK(10).setSeed(42L).setMaxIter(10)
         .setInitMode("random").fit(train)
       train.unpersistIf()
@@ -161,7 +161,7 @@ object AnomalyML {
   def a3KmeansOutlier(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.spread(s, Tables.embeddings(s, dir))
       .select(col("vec_id"), col("embedding"))
-      .cacheIf()
+      .cache()
     // native codegen nearest-centroid (r7): same first-wins argmin
     // loop the scoring UDF ran, minus the per-row Seq[Float] boxing;
     // the 10×64 centroid model rides the plan directly
@@ -170,7 +170,7 @@ object AnomalyML {
     val scored = e.withColumn("dc", dc)
       .select(col("vec_id"), col("dc.cluster").as("cluster"),
         col("dc.dist").as("dist"))
-      .cacheIf()
+      .cache()
     // fence at the exact 98th percentile of centroid distance (the
     // synthetic clusters are tight enough that mean+2σ flags nothing);
     // at real scale swap percentile → approx_percentile, same plan shape.
@@ -339,7 +339,7 @@ object AnomalyML {
         ((col("secs") - lit(minS)) * lit(chunks.toLong) / lit(span)).cast("int"))
       .select(col("key"), col("chunk"), col("event_id"), col("secs"),
         col("value"), col("mean"), col("sd"))
-      .cacheIf()
+      .cache()
     // fixpoint loop over boundary states: scan dirty chunks from their
     // assumed starts, stitch, repeat until assumptions hold
     type Cell = (String, Int)
@@ -756,7 +756,7 @@ object AnomalyML {
     import org.apache.spark.ml.stat.Summarizer
     import org.apache.spark.ml.linalg.Vector
     val vecs = e.select(array_to_vector(col("embedding")).as("features"))
-      .cacheIf()
+      .cache()
     val mean = vecs.select(Summarizer.mean(col("features")))
       .first().getAs[Vector](0).toArray
     val pc = new PCA().setK(k).setInputCol("features").setOutputCol("pc")
@@ -788,7 +788,7 @@ object AnomalyML {
     val scored = e.select(col("vec_id"), col("embedding"))
       .withColumn("err", GraftShim.column(graft.functions.PcaResidual(
         GraftShim.expression(col("embedding")), mean, pcValues)))
-      .cacheIf()
+      .cache()
     // cut rounded to 6 dp (the a1 discipline): both engines' exact-
     // percentile interpolation can differ in the last ulp, and the cut
     // sits in a FILTER — rounding makes the cut engine-stable, which

@@ -292,7 +292,7 @@ object Dedup {
     import s.implicits._
     val pfx = docs
       .select(col("doc_id"), substring(col("text"), 1, prefixLen).as("p"))
-      .cacheIf()
+      .cache()
     val bg = pfx.as[(Long, String)].flatMap { case (id, p) =>
         p.split(" ").iterator.sliding(2).map(_.mkString(" "))
           .toSet.iterator.map((g: String) => (id, g))
@@ -333,7 +333,7 @@ object Dedup {
     val kept = bg.groupBy("g").agg(count(lit(1)).as("df_g"))
       .filter(col("df_g") <= maxDf).select("g")
     val bgkC = bg.join(kept.hint("shuffle_hash"), Seq("g"), "left_semi")
-      .cacheIf()
+      .cache()
     val bgk = bgkC.hint("shuffle_hash")
     val cand = bgk.select(col("doc_id").as("a"), col("g"))
       .join(bgk.select(col("doc_id").as("b"), col("g")), "g")
@@ -480,7 +480,7 @@ object Dedup {
     // sf0.1); sized exchanges only where the default under-partitions
     def sized(df: DataFrame, cols: Column*): DataFrame =
       if (parts > defaultP) df.repartition(parts, cols: _*) else df
-    val exploded = Shingles.index(docs, k).cacheIf()
+    val exploded = Shingles.index(docs, k).cache()
     val dfg = exploded.groupBy("g").agg(count(lit(1)).as("df_g"))
       .filter(col("df_g") <= MaxShingleDf)
     // one shuffle by doc_id: each doc's kept shingles as ONE bare long
@@ -493,7 +493,8 @@ object Dedup {
     // VERDICT r9 item 1 — the d2-family shuffle-write tail).
     // pk packs (doc_id, n_sh) into ONE long (id·2²⁰ + n_sh) for the
     // three heaviest exchanges in the engine (~25 GB of shuffle writes
-    // at sf100, BASELINE_SELF §io-probe): the prefix/full join inputs
+    // at sf100, `git show acf731b:BASELINE_SELF.md` §io-probe): the
+    // prefix/full join inputs
     // and the candidate pair stream shrink from 3-long to 2-long rows,
     // and the pair-count groupBy keys on bare (pa, pb) with na riding
     // free inside pa — nothing re-joins until the pairs are
@@ -520,7 +521,7 @@ object Dedup {
           x => x.getField("g")).as("gs"),
         count(lit(1)).as("n_sh"))
       .select(col("doc_id"), col("gs"), col("n_sh"), packed.as("pk"))
-      .cacheIf()
+      .cache()
     val f = floor(lit(minCover) * col("n_sh"))
     val prefixLen = least(col("n_sh"),
       col("n_sh") - f + lit(ContainPrefixExtra)).cast("int")
@@ -611,7 +612,7 @@ object Dedup {
     def sized(df: DataFrame, cols: Column*): DataFrame =
       if (parts > defaultP) df.repartition(parts, cols: _*) else df
     val cExp = Shingles.index(corpus, k)
-      .withColumnRenamed("doc_id", "b").cacheIf()
+      .withColumnRenamed("doc_id", "b").cache()
     // hot shingles (df > cap) leave the Jaccard universe SYMMETRICALLY:
     // both sides drop them, but a probe shingle merely ABSENT from the
     // corpus still counts in the probe's denominator — novel content in
@@ -753,7 +754,7 @@ object Dedup {
     // `quality` is a live plan — uncached, the quality pass (a full
     // fact scan at corpus scale) ran TWICE (ed4bdad runtime audit of
     // the final plan: 3 documents scans, 0 reused). O(clustered docs) rows, 4 columns.
-    val scored = clusters.join(quality, "doc_id").cacheIf()
+    val scored = clusters.join(quality, "doc_id").cache()
     // argmax per cluster through the bounded k=1 heaps — ≤ 1 row per
     // (cluster, partition) shuffles, never a full per-cluster sort
     val keepers = graft.plans.TopKPerGroup.perKey(scored,
@@ -817,7 +818,7 @@ object Dedup {
     // uncached (it's 90% of the corpus — recomputing is cheaper than
     // materializing at scale).
     val testSh = base.filter(col("is_test"))
-      .select(col("doc_id"), col("g")).cacheIf()
+      .select(col("doc_id"), col("g")).cache()
     val trainSh = base.filter(!col("is_test"))
       .select(col("g")).distinct()
     val counts = testSh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
@@ -874,7 +875,7 @@ object Dedup {
         Shingles.docBlocks(text, k).iterator.map(g => (id, g))
       }
       .toDF("doc_id", "g")
-      .cacheIf()
+      .cache()
     val dup = blocks.groupBy("g").count()
       .filter(col("count") >= 2).select("g")
     val perDoc = blocks.groupBy("doc_id").agg(count(lit(1)).as("n_blocks"))
@@ -1011,7 +1012,7 @@ object Dedup {
     // cache the assignment: both join sides consume it, and without the
     // cache the fact is scanned (and the k-centroid distance map
     // evaluated) twice
-    val cl = semClusters(e, targetCluster).cacheIf()
+    val cl = semClusters(e, targetCluster).cache()
     val a = cl.select(col("cl"), col("vec_id").as("a"), col("embedding").as("ea"))
     val b = cl.select(col("cl"), col("vec_id").as("b"), col("embedding").as("eb"))
     val out = a.join(b, "cl")

@@ -78,7 +78,7 @@ object DedupApprox {
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .map { case (id, t) => DocSig(id, minhashSig(t)) }
-      .cacheIf()
+      .cache()
     // band key = the EXACT 5-value tuple (not a hash of it): two docs
     // bucket together iff the band's signature rows are identical, the
     // semantics the DuckDB oracle states directly — no collision caveat.
@@ -215,7 +215,7 @@ object DedupApprox {
   def d4Simhash(s: SparkSession, dir: String): DataFrame = {
     // cached: the capped chunk frame feeds both sides of the self-join,
     // which would otherwise recompute the (md5-heavy) signature map
-    val kept = simhashChunks(Tables.documents(s, dir)).cacheIf()
+    val kept = simhashChunks(Tables.documents(s, dir)).cache()
     val out = kept.as("x").join(kept.as("y"),
         col("x.band") === col("y.band") && col("x.chunk") === col("y.chunk") &&
           col("x.doc_id") < col("y.doc_id"))

@@ -208,7 +208,7 @@ object EventOps {
     * [sql-oracle]. */
   def e23DetectorScorecard(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
-      .select(col("event_id"), col("event_type"), col("value")).cacheIf()
+      .select(col("event_id"), col("event_type"), col("value")).cache()
     val st = ev.groupBy("event_type").agg(
         count(lit(1)).as("n"), dsum(col("value")).as("s1"),
         dsumSq(col("value")).as("s2"),
@@ -485,7 +485,7 @@ object EventOps {
       .agg(count(lit(1)).as("nm"), dsum(col("value")).as("sm"))
       .withColumn("v", col("sm") / col("nm"))
       .select("m", "event_type", "v")
-      .cacheIf()
+      .cache()
     val a = byMin.select(col("m"), col("event_type"), col("v").as("va"))
       .withColumn("lag", explode(array(lags.map(lit): _*)))
       .withColumn("m2", col("m") + col("lag") * 60)
@@ -529,7 +529,7 @@ object EventOps {
     * hash-matches. [sql-oracle]. */
   def e17Ensemble(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
-      .select(col("event_id"), col("event_type"), col("value")).cacheIf()
+      .select(col("event_id"), col("event_type"), col("value")).cache()
     // one combined per-type aggregate: z-stats (e5), median (e6's
     // first pass) and quartile fences (e7) off the same scan
     val st = ev.groupBy("event_type").agg(

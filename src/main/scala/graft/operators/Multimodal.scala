@@ -221,7 +221,7 @@ object Multimodal {
     val s = docs.sparkSession
     import s.implicits._
     // cached: feeds the bucket-count agg and both self-join sides
-    val bands = bandRows(docs).cacheIf()
+    val bands = bandRows(docs).cache()
     val kept = capBuckets(bands)
     val x = kept.select(col("band"), col("chunk"),
       col("doc_id").as("a"), col("hist").as("ha"))

@@ -383,7 +383,7 @@ object Similarity {
       val trainFrac = math.min(1.0, 100000.0 / math.max(n, 1L))
       val train = Sampling.uniform(corpus, col("vec_id"), trainFrac)
         .select(array_to_vector(col("embedding")).as("features"))
-        .coalesce(8).cacheIf()
+        .coalesce(8).cache()
       // random init: k-means|| spends ~2 extra passes (several jobs)
       // picking seeds — pointless for a coarse quantizer on a bounded
       // cached sample, where 10 Lloyd iterations converge either way
@@ -469,7 +469,8 @@ object Similarity {
     // as a reference object. The r5 form carried them behind a Scala
     // UDF — r7 moves encode/norm/ADC into native codegen expressions
     // (ModelExprs): same loops bit-for-bit, no converter-layer Seq
-    // boxing on the scan (measured min-of-6 at sf0.1: see SURVEY §9).
+    // boxing on the scan (measured min-of-6 at sf0.1: see §9 of
+    // `git show acf731b:SURVEY.md`).
     val kk = pq.k
     val qtabFlat: Map[Long, Array[Double]] = queries
       .select(col("vec_id"), col("embedding")).collect().map { r =>

@@ -470,7 +470,7 @@ object TextOps {
     val words = lmWords(docs)
     // cached: feeds the total, the head pull and the tail join —
     // without it the word-count aggregate runs three times
-    val counts = words.groupBy("word").count().cacheIf()
+    val counts = words.groupBy("word").count().cache()
     val total = counts.agg(sum("count")).head.getLong(0)
     val out = lmScorePlan(words, counts, total, headK).finishIf()
     counts.unpersistIf()

@@ -23,7 +23,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   *
   * Measured and printed per phase: per-batch wall latency, state rows,
   * state memory, and the RocksDB SST footprint from
-  * StateOperatorProgress — the numbers SURVEY §10 records for the
+  * StateOperatorProgress — the numbers §10 of
+  * `git show acf731b:SURVEY.md` records for the
   * 100 TB streaming claim (state is O(1) per key here; st3/st14's
   * O(cap·dim) rings scale the same hash-partitioned way with a larger
   * constant).

@@ -10,8 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BenchGateSpec extends AnyFunSuite {
 
-  private lazy val base = Bench.loadBaseline()
+  private lazy val base = Bench.loadGate()
   private val controls = Bench.HostControls ++ Bench.HostControlsShuffle
+
+  /** A gate file at `tmp`, one space-separated row per line (spaces
+    * become the file's tabs). */
+  private def writeGate(tmp: java.nio.file.Path, rows: String*): Unit =
+    java.nio.file.Files.writeString(tmp,
+      rows.map(_.replace(' ', '\t')).mkString("", "\n", "\n"))
 
   test("every host control resolves in SparkEntry.queries") {
     val missing = controls.filterNot(SparkEntry.queries.contains)
@@ -21,8 +27,8 @@ class BenchGateSpec extends AnyFunSuite {
   }
 
   test("every host control has a gate-table base row") {
-    assert(base.nonEmpty, "gate table parse came back empty — check the " +
-      "'## Gate table (authoritative)' marker in BASELINE_SELF.md")
+    assert(base.nonEmpty, "gate parse came back empty — is bench_gate.tsv " +
+      "at the repo root?")
     val missing = controls.filterNot(base.contains)
     assert(missing.isEmpty,
       s"control queries missing from the authoritative gate table: $missing")
@@ -45,26 +51,17 @@ class BenchGateSpec extends AnyFunSuite {
   }
 
   test("volume table parses and volume_verdict flags only real drift") {
-    // synthetic table through the same marker-headed parse path the
-    // production read uses
-    val tmp = java.nio.file.Files.createTempFile("volbase", ".md")
-    java.nio.file.Files.writeString(tmp,
-      """## Volume table (authoritative, sf0.1 — host-independent)
-        || query | wmb | wrec | pkmb |
-        ||---|---|---|---|
-        || q1_agg | 10 | 100000 | 64 |
-        || d9_fuzzy_join | 100 | 2000000 | 512 |
-        || t1_langid | 0 | 0 | 16 |
-        |
-        |## sf1 historical
-        || q1_agg | 999 | 999 | 999 |
-        |""".stripMargin)
-    val base = Bench.loadVolumeBaseline(tmp.toString)
+    // synthetic gate file through the same reader the production
+    // read uses
+    val tmp = java.nio.file.Files.createTempFile("volbase", ".tsv")
+    writeGate(tmp, "query sec wmb wrec pkmb", "q1_agg 1.5 10 100000 64",
+      "d9_fuzzy_join 2.25 100 2000000 512", "t1_langid 0.4 0 0 16")
+    val base = Bench.loadGate(tmp.toString)
     assert(base == Map(
-      "q1_agg" -> ((10L, 100000L, 64L)),
-      "d9_fuzzy_join" -> ((100L, 2000000L, 512L)),
-      "t1_langid" -> ((0L, 0L, 16L))),
-      s"marker-scoped parse broke: $base")
+      "q1_agg" -> Bench.GateRow(1.5, 10L, 100000L, 64L),
+      "d9_fuzzy_join" -> Bench.GateRow(2.25, 100L, 2000000L, 512L),
+      "t1_langid" -> Bench.GateRow(0.4, 0L, 0L, 16L)),
+      s"gate file parse broke: $base")
     def tot(wmb: Long, wrec: Long) = VolumeListener.Totals(
       wmb * 1048576, wrec, 0, 0, 0, 0)
     // within thresholds (records +0.5%, bytes +10%) → no drift;
@@ -110,6 +107,25 @@ class BenchGateSpec extends AnyFunSuite {
     java.nio.file.Files.delete(tmp)
   }
 
+  test("a malformed gate row throws with the file and line, never drops") {
+    // the gate's signal depends on every row landing; a row the reader
+    // skipped would shrink n_compared without a word
+    val tmp = java.nio.file.Files.createTempFile("badgate", ".tsv")
+    def err(row: String): String = {
+      writeGate(tmp, "query sec wmb wrec pkmb", "q1_agg 1.5 10 100000 64", row)
+      intercept[IllegalArgumentException](Bench.loadGate(tmp.toString))
+        .getMessage
+    }
+    val cols = err("t1_langid 0.4 0 0")
+    assert(cols.startsWith(s"$tmp:3:") && cols.contains("4 columns"), cols)
+    val num = err("t1_langid 0.4s 0 0 16")
+    assert(num.startsWith(s"$tmp:3:") && num.contains("non-numeric"), num)
+    val dup = err("q1_agg 1.6 10 100000 64")
+    assert(dup.startsWith(s"$tmp:3:") && dup.contains("duplicate query q1_agg"),
+      dup)
+    java.nio.file.Files.delete(tmp)
+  }
+
   test("innerReps: 3 below the 0.55 s jitter floor, 1 above or unknown") {
     assert(Bench.innerReps(Some(0.135)) == 3)   // the i2 class
     assert(Bench.innerReps(Some(0.330)) == 3)   // the i10 class (r13: 6-sample rows at 0.33–0.50 read 1.3–1.5× where 16-sample rows read ≤1.27×)
@@ -121,7 +137,7 @@ class BenchGateSpec extends AnyFunSuite {
 
   test("gate table parses to the full 104-query surface") {
     // the gate's signal depends on covering every query; a truncated
-    // parse (marker moved, table split) would quietly shrink n_compared
+    // parse (a row lost from bench_gate.tsv) would quietly shrink n_compared
     assert(base.size == SparkEntry.queries.size,
       s"gate table has ${base.size} rows but SparkEntry has " +
         s"${SparkEntry.queries.size} queries")
@@ -130,7 +146,7 @@ class BenchGateSpec extends AnyFunSuite {
   test("authoritative volume table parses to the full query surface") {
     // same discipline as the gate table (r12): volume_verdict's
     // self-adjudication power depends on every query having a row
-    val vol = Bench.loadVolumeBaseline()
+    val vol = Bench.loadGate()
     assert(vol.size == SparkEntry.queries.size,
       s"volume table has ${vol.size} rows but SparkEntry has " +
         s"${SparkEntry.queries.size} queries — re-record from a " +

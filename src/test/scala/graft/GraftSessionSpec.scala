@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the SF-aware shuffle-codec choice (r11, VERDICT r10 item 2):
   * zstd is the shipped default from the sf10 input class up (measured
   * −35% exchange bytes on the d2-family shuffles, twice, two scales,
-  * two host days — BASELINE_SELF §r10 scale session), lz4 below it
+  * two host days — `git show acf731b:BASELINE_SELF.md` §r10 scale
+  * session), lz4 below it
   * (gate scale is codec-CPU-bound and zstd is wall-neutral there), and
   * the cluster-side builder defaults to zstd outright (a cluster IS
   * the at-scale class). A silent flip of any of these is a perf

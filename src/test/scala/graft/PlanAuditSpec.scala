@@ -623,6 +623,14 @@ class PlanAuditSpec extends SparkSpec {
       "SPARK_GRAFT_LINEITEM_CHUNKS"), s"env variables in main: $names")
   }
 
+  test("main reads no markdown file as data") {
+    // prose tables drift under edits a reader cannot see (a new heading
+    // moved what a regex scan picked up); machine-read inputs such as
+    // the bench gate live in data files
+    val hits = mainSourceHits(""""[^"]*\.md"""")
+    assert(hits.isEmpty, s"markdown path literals in main:\n${hits.mkString("\n")}")
+  }
+
   test("keyed stateful operators set no processing-time timeouts") {
     // every flatMapGroupsWithState keeps state per key with NoTimeout;
     // a timeout branch no caller enables ships without ever running
