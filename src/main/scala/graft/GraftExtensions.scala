@@ -23,7 +23,8 @@ import graft.plans.TopKPerGroup
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[VecDot].getName, null, name, usage, "")
+    new ExpressionInfo(classOf[VecDot].getName, null, name, usage,
+      "", "", "", "", "", "", "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => TopKPerGroup.Strategy)

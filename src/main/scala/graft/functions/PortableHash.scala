@@ -30,11 +30,6 @@ object PortableHash {
   def minGramHash(c: Column, gram: Int): Column =
     GraftShim.column(MinGramHash(GraftShim.expression(c.cast("string")), gram))
 
-  /** Same value via built-ins only, for composition inside SQL
-    * `expr(...)` strings on sessions without graft's extensions. */
-  def mdhash64Sql(e: String): String =
-    s"CAST(conv(substr(md5(CAST($e AS STRING)), 1, 15), 16, 10) AS BIGINT)"
-
   /** Salted bucket in [0, buckets): hash of "<value>:<salt>". */
   def bucket(c: Column, salt: String, buckets: Long): Column =
     pmod(mdhash64(concat(c.cast("string"), lit(":" + salt))), lit(buckets))

@@ -78,13 +78,6 @@ case class ProductQuantizer(m: Int, k: Int, subDim: Int,
     while (i < subDim) { p += ctr(i) * ctr(i); i += 1 }
     p
   }
-
-  def approxDot(table: Array[Array[Double]], code: Array[Byte]): Double = {
-    var d = 0.0
-    var s = 0
-    while (s < m) { d += table(s)(code(s) & 0xff); s += 1 }
-    d
-  }
 }
 
 object ProductQuantizer {

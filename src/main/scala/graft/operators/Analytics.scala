@@ -431,55 +431,41 @@ object Analytics {
   /** q13_window_suite — ntile/percent_rank/cume_dist per group over a
     * TOTAL order (price, orderkey, linenumber — the last two unique),
     * so rank ≡ row_number and all three functions are closed-form in
-    * (global row number, group size). Above [[Q13ChunkThreshold]] rows
+    * (global row number, group size). Where [[ChunkScan]] picks it,
     * that closed form is computed CHUNK-PARALLEL ([[q13Chunked]]): the
     * window form's parallelism is |l_returnflag| = 3 — three tasks
     * each sort and stream 20M rows at sf10 while 29 cores idle, and on
-    * a real cluster the group count caps the whole plan. Below the
-    * threshold the plain window form is cheaper than the rank
-    * orchestration and is used unchanged (the one counting scan that
-    * decides is the e18 self-selection discipline). Both paths are
-    * bit-identical — spec-pinned on tie-heavy data and every n<k edge. */
+    * a real cluster the group count caps the whole plan. Below
+    * [[ChunkScan.MinRows]] the plain window form is cheaper than the
+    * rank orchestration and is used unchanged: sf0.01 takes the window
+    * form, while the sf0.1 sweeps — bench AND DuckDB oracle —
+    * exercise the chunked path, so the scale path is oracle-covered,
+    * not only spec-covered. Both paths are bit-identical — spec-pinned
+    * on tie-heavy data and every n<k edge. */
   def q13WindowSuite(s: SparkSession, dir: String): DataFrame =
     q13Suite(Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         col("l_extendedprice")))
 
-  /** The size/cardinality-guarded dispatch between [[q13Window]] and
-    * [[q13Chunked]] (factored out of the dir-bound entry so the guard
+  /** The [[ChunkScan]] dispatch between [[q13Window]] and
+    * [[q13Chunked]] (factored out of the dir-bound entry so the routing
     * is spec-testable on synthetic frames). */
-  private[operators] def q13Suite(li: DataFrame,
-      maxGridCells: Long = 1L << 22): DataFrame = {
+  private[operators] def q13Suite(li: DataFrame): DataFrame = {
     // NOT cached, deliberately: the suite reads the 4-column fact
-    // three times (guard agg, count grid, rank pass) and the e17-style
+    // three times (bounds agg, count grid, rank pass) and the e17-style
     // .cache() of the projection was tried and REVERTED — at sf100
     // (600M rows) building the columnar cache plus the storage pool's
     // squeeze on the rank shuffle measured 281 s cold vs 229 s for the
     // three pruned parquet scans (measured-no-win-revert, r7 s2)
-    val b = li.agg(count(lit(1)), min("l_extendedprice"),
-      max("l_extendedprice"),
-      approx_count_distinct(col("l_returnflag"), rsd = 0.05)).head()
-    // below the threshold the single-sort window form wins outright;
-    // past maxGridCells the chunked form's |groups|×F driver count
-    // grid stops being bounded — and with that many groups the window
-    // form's partitionBy parallelism has no group wall anyway
-    if (b.getLong(0) < Q13ChunkThreshold ||
-        b.getLong(3) * Q13FineBuckets > maxGridCells) q13Window(li)
-    else q13Chunked(li, b.getDouble(1), b.getDouble(2),
-      fineBuckets = Q13FineBuckets.toInt)
+    val b = ChunkScan.measure[Double](li, col("l_returnflag"),
+      col("l_extendedprice"))
+    if (ChunkScan.chunked(b.rows, b.keys, Q13FineBuckets)) q13Chunked(li, b)
+    else q13Window(li)
   }
 
-  /** 500k keeps sf0.01 (and the spec SF) on the window form while the
-    * sf0.1 driver sweeps — bench AND DuckDB oracle — exercise the
-    * chunked path, so the scale path is oracle-covered, not only
-    * spec-covered. */
-  private val Q13ChunkThreshold = 500000L
-
-  /** The ONE fine-bucket count: [[q13Suite]] passes it to
-    * [[q13Chunked]] explicitly, so the cardinality guard always sizes
-    * its grid cap against the bucket count actually used (ADVICE r6 —
-    * previously a second literal default could drift silently). */
-  private val Q13FineBuckets = 4096L
+  /** Fine price buckets per group of [[q13Chunked]] — its cells per
+    * key in [[ChunkScan]]'s grid. */
+  private val Q13FineBuckets = 4096
 
   /** The |groups|-parallel window form — the small-input path and the
     * chunked path's correctness oracle. */
@@ -517,11 +503,12 @@ object Analytics {
     * the group-sort wall is gone and the residual cost is the output
     * orderBy + scans, which both forms pay and a cluster divides by
     * its executor count (the window form's 3-task sort it cannot). */
-  private[operators] def q13Chunked(li: DataFrame, minP: Double,
-      maxP: Double, fineBuckets: Int = Q13FineBuckets.toInt): DataFrame = {
+  private[operators] def q13Chunked(li: DataFrame, bounds: ChunkScan.Bounds[Double],
+      fineBuckets: Int = Q13FineBuckets): DataFrame = {
     val s = li.sparkSession
     import s.implicits._
-    val span = maxP - minP
+    val minP = bounds.lo
+    val span = bounds.hi - minP
     val fb =
       if (span == 0) lit(0)
       else least(floor((col("l_extendedprice") - lit(minP)) / lit(span)

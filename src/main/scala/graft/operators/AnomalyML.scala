@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftShim, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -22,10 +22,6 @@ case class CusumAlarm(event_id: Long, key: String, value: Double,
 
 /** Scored EWMA output row. */
 case class EwmaRow(event_id: Long, user_id: Long, value: Double,
-    ewma: Double, resid: Double)
-
-/** Generic-key EWMA output row ([[AnomalyML.ewmaChunked]]). */
-case class EwmaKeyRow(event_id: Long, key: String, value: Double,
     ewma: Double, resid: Double)
 
 /** Holt level+trend output row ([[AnomalyML.a6Holt]]). */
@@ -201,8 +197,8 @@ object AnomalyML {
     *
     * Baselines (per-key mean/σ) are one map-side-combined agg joined
     * back broadcast; the sequential scan is the same secondary-sort +
-    * O(1)-state mapPartitions shape as a2 — no per-key materialization,
-    * a hot key streams through. */
+    * O(1)-state mapPartitions shape as a2 — no per-key materialization
+    * of rows (only of the key's alarms), a hot key streams through. */
   /** Engine-stable per-key CUSUM baseline: decimal-exact population
     * mean/σ. A plain double `avg`/`stddev_pop` depends on partition
     * summation order and differs across engines in the last ulps —
@@ -229,44 +225,24 @@ object AnomalyML {
       tsCol.cast("long").as("secs"), valCol.cast("double").as("value"))
     val stats = cusumStats(base)
     // the per-key stats table is |keys| rows — broadcast by default
-    // (the low-cardinality case), but a high-cardinality caller (the
-    // cusumChunked guard fallback) joins it unhinted and lets AQE pick
+    // (the low-cardinality case), but past ChunkScan's grid cap a4
+    // joins it unhinted and lets AQE pick
     base.join(if (hintBroadcastStats) broadcast(stats) else stats, "key")
       .select(col("key"), col("event_id"), col("secs"), col("value"),
         col("mean"), col("sd"))
       .repartition(col("key"))
       .sortWithinPartitions("key", "secs", "event_id")
       .as[KeyedVal]
-      .mapPartitions { it =>
-        var cur: String = null
-        var pos = 0.0
-        var neg = 0.0
-        it.flatMap { r =>
-          if (r.key != cur) { cur = r.key; pos = 0.0; neg = 0.0 }
-          val slack = slackK * r.sd
-          val h = alarmH * r.sd
-          pos = math.max(0.0, pos + (r.value - r.mean - slack))
-          neg = math.min(0.0, neg + (r.value - r.mean + slack))
-          val out = Vector.newBuilder[CusumAlarm]
-          if (r.sd > 0 && pos > h) {
-            out += CusumAlarm(r.event_id, r.key, r.value, "up",
-              math.rint(pos / r.sd * 1e6) / 1e6)
-            pos = 0.0
-          }
-          if (r.sd > 0 && neg < -h) {
-            out += CusumAlarm(r.event_id, r.key, r.value, "down",
-              math.rint(-neg / r.sd * 1e6) / 1e6)
-            neg = 0.0
-          }
-          out.result()
-        }
-      }
+      .mapPartitions(it => ChunkScan.runs(it)(_.key).flatMap { case (_, rows) =>
+        scanChunk(rows, 0.0, 0.0, slackK, alarmH)._1
+      })
       .toDF()
       .orderBy("event_id", "side")
   }
 
-  /** Local CUSUM scan over one (key, chunk)'s time-ordered rows from a
-    * given start state; returns (alarms, endPos, endNeg). */
+  /** The CUSUM recurrence over one key's (or one (key, chunk)'s)
+    * time-ordered rows from a given start state; returns (alarms,
+    * endPos, endNeg). */
   private def scanChunk(rows: Iterator[KeyedVal], startPos: Double,
       startNeg: Double, slackK: Double, alarmH: Double)
       : (Vector[CusumAlarm], Double, Double) = {
@@ -292,10 +268,15 @@ object AnomalyML {
     (out.result(), pos, neg)
   }
 
+  /** Time chunks per key of [[cusumChunked]] — its cells per key in
+    * [[ChunkScan]]'s grid. */
+  private val CusumChunks = 16
+
   /** Two-phase (chunk-parallel) CUSUM, alarm-for-alarm equal to
     * [[cusum]] but with parallelism = #keys × #chunks instead of #keys
     * (the VERDICT r2 scale fix: a low-cardinality key universe no
-    * longer serializes the scan into a handful of tasks).
+    * longer serializes the scan into a handful of tasks). `bounds` is
+    * [[ChunkScan.measure]] over the key and `tsCol` as long seconds.
     *
     * The reset-on-alarm recurrence has no closed-form chunk transfer
     * (an alarm resets state to 0, so a chunk's end state is not an
@@ -315,34 +296,30 @@ object AnomalyML {
     * grid, never row data. Each round shuffles only still-dirty chunks
     * (filter pushed below the repartition). */
   def cusumChunked(df: DataFrame, keyCol: Column, idCol: Column, tsCol: Column,
-      valCol: Column, slackK: Double = 0.5, alarmH: Double = 5.0,
-      chunks: Int = 16, maxGridCells: Long = 1L << 22): DataFrame = {
+      valCol: Column, bounds: ChunkScan.Bounds[Long], slackK: Double = 0.5,
+      alarmH: Double = 5.0, chunks: Int = CusumChunks): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
     val base0 = df.select(keyCol.cast("string").as("key"), idCol.as("event_id"),
       tsCol.cast("long").as("secs"), valCol.cast("double").as("value"))
-    val b = base0.agg(min("secs"), max("secs"),
-      approx_count_distinct(col("key"), rsd = 0.05)).collect()(0)
-    // key-cardinality guard: the fixpoint's boundary table and the
-    // broadcast stats both scale with |keys| — past maxGridCells/chunks
-    // keys the sequential per-key form is the safe AND parallel plan
-    // (that many keys already fan out the per-key scan), with the
-    // stats join left to AQE instead of a forced broadcast
-    if (b.isNullAt(0) || b.getLong(2) * chunks > maxGridCells)
-      return cusum(df, keyCol, idCol, tsCol, valCol, slackK, alarmH,
-        hintBroadcastStats = false)
     val stats = cusumStats(base0)
-    val (minS, maxS) = (b.getLong(0), b.getLong(1))
-    val span = math.max(1L, maxS - minS + 1)
+    val span = math.max(1L, bounds.hi - bounds.lo + 1)
     val base = base0.join(broadcast(stats), "key")
       .withColumn("chunk",
-        ((col("secs") - lit(minS)) * lit(chunks.toLong) / lit(span)).cast("int"))
+        ((col("secs") - lit(bounds.lo)) * lit(chunks.toLong) / lit(span)).cast("int"))
       .select(col("key"), col("chunk"), col("event_id"), col("secs"),
         col("value"), col("mean"), col("sd"))
       .cache()
+    type Cell = (String, Int)
+    // each (key, chunk) cell of `df` as one run of time-ordered rows
+    def byCell(df: DataFrame) = df
+      .repartition(col("key"), col("chunk"))
+      .sortWithinPartitions("key", "chunk", "secs", "event_id")
+      .as[(String, Int, Long, Long, Double, Double, Double)]
+    def keyed(rows: Iterator[(String, Int, Long, Long, Double, Double, Double)]) =
+      rows.map(r => KeyedVal(r._1, r._3, r._4, r._5, r._6, r._7))
     // fixpoint loop over boundary states: scan dirty chunks from their
     // assumed starts, stitch, repeat until assumptions hold
-    type Cell = (String, Int)
     var assumed = Map.empty[Cell, (Double, Double)].withDefaultValue((0.0, 0.0))
     var ends = Map.empty[Cell, (Double, Double)]
     var dirty: Set[Cell] = null // null = all (first round)
@@ -359,30 +336,13 @@ object AnomalyML {
         base.join(broadcast(
             (dirty.toSeq: Seq[(String, Int)]).toDF("key", "chunk")),
           Seq("key", "chunk"), "left_semi")
-      val scanned = pruned
-        .repartition(col("key"), col("chunk"))
-        .sortWithinPartitions("key", "chunk", "secs", "event_id")
-        .as[(String, Int, Long, Long, Double, Double, Double)]
-        .mapPartitions { it =>
-          // group-contiguous scan: partition is sorted by (key, chunk)
-          val buf = it.buffered
-          new Iterator[(String, Int, Double, Double)] {
-            def hasNext = buf.hasNext
-            def next() = {
-              val (k, c) = (buf.head._1, buf.head._2)
-              val (sp, sn) = startsBc.value((k, c))
-              val rows = new Iterator[KeyedVal] {
-                def hasNext = buf.hasNext && buf.head._1 == k && buf.head._2 == c
-                def next() = {
-                  val r = buf.next()
-                  KeyedVal(r._1, r._3, r._4, r._5, r._6, r._7)
-                }
-              }
-              val (_, ep, en) = scanChunk(rows, sp, sn, slackK, alarmH)
-              (k, c, ep, en)
-            }
-          }
-        }
+      val scanned = byCell(pruned)
+        .mapPartitions(it => ChunkScan.runs(it)(r => (r._1, r._2)).map {
+          case (cell, rows) =>
+            val (sp, sn) = startsBc.value(cell)
+            val (_, ep, en) = scanChunk(keyed(rows), sp, sn, slackK, alarmH)
+            (cell._1, cell._2, ep, en)
+        })
         .collect()
       ends = ends ++ scanned.map { case (k, c, ep, en) => (k, c) -> (ep, en) }
       // stitch: true start of chunk c = end of the key's previous chunk
@@ -401,28 +361,12 @@ object AnomalyML {
     }
     // final distributed pass: alarms from the exact start states
     val startsBc = s.sparkContext.broadcast(assumed)
-    val out = base
-      .repartition(col("key"), col("chunk"))
-      .sortWithinPartitions("key", "chunk", "secs", "event_id")
-      .as[(String, Int, Long, Long, Double, Double, Double)]
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[Vector[CusumAlarm]] {
-          def hasNext = buf.hasNext
-          def next() = {
-            val (k, c) = (buf.head._1, buf.head._2)
-            val (sp, sn) = startsBc.value((k, c))
-            val rows = new Iterator[KeyedVal] {
-              def hasNext = buf.hasNext && buf.head._1 == k && buf.head._2 == c
-              def next() = {
-                val r = buf.next()
-                KeyedVal(r._1, r._3, r._4, r._5, r._6, r._7)
-              }
-            }
-            scanChunk(rows, sp, sn, slackK, alarmH)._1
-          }
-        }.flatten
-      }
+    val out = byCell(base)
+      .mapPartitions(it => ChunkScan.runs(it)(r => (r._1, r._2)).flatMap {
+        case (cell, rows) =>
+          val (sp, sn) = startsBc.value(cell)
+          scanChunk(keyed(rows), sp, sn, slackK, alarmH)._1
+      })
       .toDF()
       .orderBy("event_id", "side")
       .finishIf()
@@ -430,80 +374,17 @@ object AnomalyML {
     out
   }
 
-  /** a4_cusum_drift — chunk-parallel [[cusumChunked]] bound to
-    * events.value per event_type ([[cusum]] is the sequential twin —
-    * spec-asserted alarm-for-alarm equal).
+  /** a4_cusum_drift — CUSUM of events.value per event_type: the
+    * chunk-parallel [[cusumChunked]] where [[ChunkScan]] picks it, else
+    * the sequential [[cusum]] (spec-asserted alarm-for-alarm equal).
     * [rows-only]: recursion-defined, spec-tested on planted drift. */
-  def a4CusumDrift(s: SparkSession, dir: String): DataFrame =
-    cusumChunked(Tables.events(s, dir), col("event_type"), col("event_id"),
-      col("ts"), col("value"))
-
-  /** Chunk-parallel EWMA for LOW-CARDINALITY keys, exact via
-    * OVERLAPPED WARM-UP: a2's repartition-on-key form serializes each
-    * key into one task, which is right when keys are plentiful
-    * (user_id) and a bottleneck when they aren't (plant_type ~ 4 at a
-    * trillion rows). Unlike CUSUM (reset-on-alarm → fixpoint stitch,
-    * [[cusumChunked]]), EWMA forgets its start EXPONENTIALLY:
-    * (1−α)^n < 1 double ulp for n ≥ ~150 at α = 0.3, and once two
-    * floating-point runs of the same recurrence over the same inputs
-    * agree to within an ulp they coincide bitwise from then on. So
-    * each (key, time-chunk) task simply also scans the PREVIOUS chunk
-    * as warm-up (seeded as if it started the key), discards the
-    * warm-up emissions, and emits its own chunk bit-identically to the
-    * sequential scan — one embarrassingly parallel pass, no driver
-    * stitch, no fixpoint, at 2× compute. Parallelism = keys × chunks.
-    *
-    * Contract: every (key, chunk) cell must hold ≥ the forgetting
-    * horizon ln(ulp)/ln(1−α) ≈ 150 rows (α = 0.3) — size `chunks`
-    * accordingly (rows / keys / 150 is the upper bound). The spec
-    * asserts bit-equality with the sequential twin at 500-row cells. */
-  def ewmaChunked(df: DataFrame, keyCol: Column, idCol: Column, tsCol: Column,
-      valCol: Column, alpha: Double = 0.3, chunks: Int = 16): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    val base0 = df.select(keyCol.cast("string").as("key"), idCol.as("event_id"),
-      tsCol.cast("long").as("secs"), valCol.cast("double").as("value"))
-    val Row(minS: Long, maxS: Long) =
-      base0.agg(min("secs"), max("secs")).collect()(0)
-    val span = math.max(1L, maxS - minS + 1)
-    val chunkOf = ((col("secs") - lit(minS)) * lit(chunks.toLong) / lit(span))
-      .cast("int")
-    // every row lands in its own cell; rows also replicate into the
-    // NEXT chunk's cell as warm-up (emit = false)
-    val own = base0.withColumn("chunk", chunkOf).withColumn("emit", lit(true))
-    val warm = base0.withColumn("chunk", chunkOf + lit(1))
-      .filter(col("chunk") < chunks).withColumn("emit", lit(false))
-    val out = own.unionAll(warm)
-      .repartition(col("key"), col("chunk"))
-      .sortWithinPartitions("key", "chunk", "secs", "event_id")
-      .as[(String, Long, Long, Double, Int, Boolean)]
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[Iterator[EwmaKeyRow]] {
-          def hasNext = buf.hasNext
-          def next() = {
-            val (k, c) = (buf.head._1, buf.head._5)
-            var seeded = false
-            var ew = 0.0
-            new Iterator[EwmaKeyRow] {
-              def hasNext = buf.hasNext && buf.head._1 == k && buf.head._5 == c
-              def next() = {
-                val r = buf.next()
-                if (!seeded) { seeded = true; ew = r._4 }
-                val resid = r._4 - ew
-                ew = alpha * r._4 + (1 - alpha) * ew
-                if (r._6)
-                  EwmaKeyRow(r._2, r._1, r._4,
-                    math.rint(ew * 1e6) / 1e6, math.rint(resid * 1e6) / 1e6)
-                else null // warm-up row: state only, no emission
-              }
-            }.filter(_ != null)
-          }
-        }.flatten
-      }
-      .toDF()
-      .orderBy("event_id")
-    out
+  def a4CusumDrift(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(s, dir)
+    val (key, id, ts, v) = (col("event_type"), col("event_id"), col("ts"), col("value"))
+    val b = ChunkScan.measure[Long](ev, key, ts.cast("long"))
+    if (ChunkScan.chunked(b.rows, b.keys, CusumChunks)) cusumChunked(ev, key, id, ts, v, b)
+    else cusum(ev, key, id, ts, v,
+      hintBroadcastStats = ChunkScan.fitsGrid(b.keys, CusumChunks))
   }
 
   /** a2_ewma — EWMA smoothing (α=0.3) + residuals per user; the batch

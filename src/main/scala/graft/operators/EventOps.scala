@@ -658,40 +658,19 @@ object EventOps {
     *
     * Scale: every stage is keys·F or keys·chunks parallel; shuffled
     * volume is n·(1 + 2w/C) rows (halo overhead 2w/C ≈ 0.2% at the
-    * defaults). Below ~4 chunks of total work it self-selects the
-    * plain window form after one bounds+count scan. Measured
-    * min-of-3: sf10 16.8 s (window form) → 4.18 s; sf1 2.53 →
-    * 2.05 s; sf0.1 rides the window form (0.86 s incl. the decision
-    * scan vs 0.61 pure — the price of never hitting the |keys|
-    * parallelism wall unnoticed). */
-  def driftScanChunked(ev: DataFrame, w: Int = 50,
-      fineBuckets: Int = 4096, chunkRows: Long = 65536,
-      maxGridCells: Long = 1L << 22): DataFrame = {
+    * defaults). `bounds` is [[ChunkScan.measure]] over event_type and
+    * secs; [[windowDrift]] runs this kernel only where [[ChunkScan]]
+    * picks it. Measured min-of-3: sf10 16.8 s (window form) → 4.18 s;
+    * sf1 2.53 → 2.05 s; sf0.1 rides the window form. */
+  def driftScanChunked(ev: DataFrame, w: Int, bounds: ChunkScan.Bounds[Long],
+      fineBuckets: Int = DriftBuckets, chunkRows: Long = 65536): DataFrame = {
     val s = ev.sparkSession
     import s.implicits._
     val typed = ev.select(col("event_id").cast("long"),
         col("event_type"), col("secs").cast("long"),
         col("value").cast("double"))
       .as[(Long, String, Long, Double)]
-    val bounds = ev.agg(min("secs"), max("secs"), count(lit(1)),
-      approx_count_distinct(col("event_type"), rsd = 0.05)).head()
-    if (bounds.isNullAt(0)) return driftScan(ev, w) // empty input
-    // self-select (the broadcast-threshold discipline): below ~4 chunks
-    // of total work the single-sort window form is strictly cheaper
-    // than the rank/fan-out orchestration, and the one bounds+count
-    // scan that decides costs ~0.1 s. Measured min-of-4: sf0.1 (100k
-    // rows) rides the window form at 0.86 s total where forced
-    // chunking reads 1.22 s; sf1+ takes the parallel path.
-    if (bounds.getLong(2) < 4 * chunkRows) return driftScan(ev, w)
-    // key-cardinality guard: the chunk grid collects |keys|×F count
-    // cells to the driver — fine for the low-cardinality keys this
-    // path exists for, unbounded for a high-cardinality caller. Past
-    // maxGridCells the per-key window form is BOTH the safe and the
-    // fast plan (≥ maxGridCells/F keys of partitionBy parallelism —
-    // there is no key wall left to fix), so fall back to it.
-    if (bounds.getLong(3) * fineBuckets > maxGridCells)
-      return driftScan(ev, w)
-    val (minS, maxS) = (bounds.getLong(0), bounds.getLong(1))
+    val (minS, maxS) = (bounds.lo, bounds.hi)
     val span = math.max(maxS - minS + 1, 1L)
     val F = fineBuckets.toLong
     def bucketOf(secs: Long): Int = (((secs - minS) * F) / span).toInt
@@ -740,19 +719,8 @@ object EventOps {
       .sortWithinPartitions("k", "chunk", "rn")
       .as[(Long, String, Long, Double, Long, Long)]
       .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(String, Long, Array[(Long, String, Long, Double, Long)])] {
-          def hasNext = buf.hasNext
-          def next() = {
-            val k = buf.head._2
-            val c = buf.head._6
-            val rows = Array.newBuilder[(Long, String, Long, Double, Long)]
-            while (buf.hasNext && buf.head._2 == k && buf.head._6 == c) {
-              val r = buf.next(); rows += ((r._1, r._2, r._3, r._4, r._5))
-            }
-            (k, c, rows.result())
-          }
-        }.flatMap { case (k, c, arr) =>
+        ChunkScan.runs(it)(r => (r._2, r._6)).flatMap { case ((k, c), run) =>
+          val arr = run.toArray
           val nKey = nB.value(k)
           val micros = arr.map(r => micro6(r._4))
           // prefix(i) = Σ micros(0..i−1) — exact integer adds
@@ -760,7 +728,7 @@ object EventOps {
           var i = 0
           while (i < arr.length) { prefix(i + 1) = prefix(i) + micros(i); i += 1 }
           arr.iterator.zipWithIndex.collect {
-            case ((id, key, secs, v, rn), p)
+            case ((id, key, secs, v, rn, _), p)
                 if rn / C == c && rn >= w && rn + w - 1 < nKey =>
               // halo contiguity: the array holds every rank in its
               // range, so the ±w frame is local prefix arithmetic
@@ -785,13 +753,21 @@ object EventOps {
   private[graft] def microsToDouble(sum: Long): Double =
     new java.math.BigDecimal(java.math.BigInteger.valueOf(sum), 6).doubleValue()
 
+  /** Fine time buckets per key of [[driftScanChunked]] — its cells
+    * per key in [[ChunkScan]]'s grid. */
+  private val DriftBuckets = 4096
+
   /** Generic core of [[e18WindowDrift]] over any
-    * (event_id, event_type, secs, value) frame. [[driftScanChunked]]
-    * picks the keys×chunks-parallel scan or the |keys|-parallel window
-    * form from the input's size and key count (bit-identical —
+    * (event_id, event_type, secs, value) frame. [[ChunkScan]] picks the
+    * keys×chunks-parallel [[driftScanChunked]] or the |keys|-parallel
+    * [[driftScan]] from the input's size and key count (bit-identical —
     * spec-pinned). */
   def windowDrift(ev: DataFrame, w: Int = 50, topK: Int = 20): DataFrame = {
-    graft.plans.TopKPerGroup.perKey(driftScanChunked(ev, w),
+    val b = ChunkScan.measure[Long](ev, col("event_type"), col("secs"))
+    val scan =
+      if (ChunkScan.chunked(b.rows, b.keys, DriftBuckets)) driftScanChunked(ev, w, b)
+      else driftScan(ev, w)
+    graft.plans.TopKPerGroup.perKey(scan,
         Seq(col("event_type")),
         Seq(abs(col("shift")).desc, col("event_id")), topK)
       .select(col("event_id"), col("event_type"), col("value"),

@@ -471,7 +471,7 @@ object TextOps {
     // cached: feeds the total, the head pull and the tail join —
     // without it the word-count aggregate runs three times
     val counts = words.groupBy("word").count().cache()
-    val total = counts.agg(sum("count")).head.getLong(0)
+    val total = counts.agg(sum("count")).head().getLong(0)
     val out = lmScorePlan(words, counts, total, headK).finishIf()
     counts.unpersistIf()
     out
@@ -482,7 +482,7 @@ object TextOps {
   private[graft] def lmQualityRaw(docs: DataFrame, headK: Int): DataFrame = {
     val words = lmWords(docs)
     val counts = words.groupBy("word").count()
-    val total = counts.agg(sum("count")).head.getLong(0)
+    val total = counts.agg(sum("count")).head().getLong(0)
     lmScorePlan(words, counts, total, headK)
   }
 

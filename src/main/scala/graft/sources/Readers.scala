@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
-import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
 
 /** Batch sources with enforced schemas (SURVEY.md §2 source/sink
@@ -32,9 +31,7 @@ object Readers {
       .json(path)
 }
 
-/** Sinks: partitioned columnar batch writes and checkpointed streaming
-  * writes — the two shapes that matter at scale.
-  */
+/** Sinks: partitioned columnar batch writes. */
 object Sinks {
 
   /** Parquet partitioned by low-cardinality columns (e.g. date, source):
@@ -47,12 +44,4 @@ object Sinks {
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(path)
   }
-
-  /** Streaming parquet sink with a checkpoint (exactly-once file sink);
-    * returns the writer so callers pick trigger/output mode. */
-  def streamingParquet(df: DataFrame, path: String,
-      checkpoint: String): DataStreamWriter[Row] =
-    df.writeStream.format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** st4_generator — synthetic telemetry generator with the reference
@@ -89,8 +89,4 @@ object Generator {
       col("value").as("seq"),
       isAnom.as("is_anomaly"))
   }
-
-  /** Streaming entry: rate source at `rps` rows/sec → telemetry. */
-  def stream(s: SparkSession, rps: Int = 8): DataFrame =
-    telemetry(s.readStream.format("rate").option("rowsPerSecond", rps).load())
 }

@@ -20,7 +20,7 @@ object StreamDedup {
   def byContent(parsed: DataFrame, watermark: String = "10 minutes"): DataFrame =
     parsed
       .withColumn("__digest",
-        md5(to_json(struct(parsed.columns.map(col): _*))))
+        md5(to_json(struct(parsed.columns.toIndexedSeq.map(col): _*))))
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("__digest")
       .drop("__digest")

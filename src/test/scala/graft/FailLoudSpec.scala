@@ -53,7 +53,7 @@ class FailLoudSpec extends SparkSpec {
       .collect()(0).getSeq[Int](0)
     val want = graft.functions.HyperplaneBuckets.compute(
       org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-        Array.fill(64)(0.1f)), 4).toIntArray.toSeq
+        Array.fill(64)(0.1f)), 4).toIntArray().toSeq
     assert(got == want)
   }
 

@@ -70,46 +70,22 @@ class AnomalyMLSpec extends SparkSpec {
     val seqOut = AnomalyML.cusum(df, col("k"), col("id"), col("secs"), col("v"))
       .collect().toSeq
     val parOut = AnomalyML.cusumChunked(df, col("k"), col("id"), col("secs"),
-        col("v"), chunks = 16)
+        col("v"), ChunkScan.measure[Long](df, col("k"), col("secs")), chunks = 16)
       .collect().toSeq
     assert(parOut.nonEmpty)
     assert(parOut == seqOut, s"chunked=${parOut.size} seq=${seqOut.size}")
-    // and on the real events table
-    val a = AnomalyML.cusum(graft.Tables.events(spark, sf), col("event_type"),
+    // and on the real events table — the kernel called directly: at the
+    // spec SF a4CusumDrift itself takes the sequential form
+    val ev = graft.Tables.events(spark, sf)
+    val a = AnomalyML.cusum(ev, col("event_type"),
       col("event_id"), col("ts"), col("value")).collect().toSeq
-    val b = AnomalyML.a4CusumDrift(spark, sf).collect().toSeq
+    val b = AnomalyML.cusumChunked(ev, col("event_type"), col("event_id"),
+      col("ts"), col("value"),
+      ChunkScan.measure[Long](ev, col("event_type"), col("ts").cast("long")))
+      .collect().toSeq
+    assert(a.nonEmpty)
     assert(a == b)
-  }
-
-  test("ewmaChunked is bit-equal to the sequential recurrence (overlap warm-up)") {
-    import spark.implicits._
-    // 3 dense keys (8 chunks x 1500 rows/cell >= the ~150-row
-    // forgetting horizon) + one key starting mid-stream (first-cell
-    // seeding when the key's first chunk > 0)
-    val rows =
-      (for (kIdx <- 0 to 2; i <- 0 until 12000) yield
-        (s"k$kIdx", (kIdx * 100000 + i).toLong, i.toLong,
-          math.sin(i * 0.7 + kIdx) * 50 + kIdx * 10)) ++
-        (9000 until 12000).map(i =>
-          ("late", (900000 + i).toLong, i.toLong, math.cos(i * 0.3) * 20))
-    val df = rows.toDF("k", "id", "secs", "v")
-    val got = AnomalyML.ewmaChunked(df, col("k"), col("id"), col("secs"),
-        col("v"), alpha = 0.3, chunks = 8)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(3), r.getDouble(4)))
-      .toSeq
-    val alpha = 0.3
-    val expected = rows.groupBy(_._1).toSeq.flatMap { case (k, rs) =>
-      var ew = 0.0; var seeded = false
-      rs.sortBy(r => (r._3, r._2)).map { r =>
-        if (!seeded) { seeded = true; ew = r._4 }
-        val resid = r._4 - ew
-        ew = alpha * r._4 + (1 - alpha) * ew
-        (r._2, k, math.rint(ew * 1e6) / 1e6, math.rint(resid * 1e6) / 1e6)
-      }
-    }.sortBy(_._1)
-    assert(got.size == expected.size)
-    assert(got == expected)
+    assert(AnomalyML.a4CusumDrift(spark, sf).collect().toSeq == a)
   }
 
   test("a1 is deterministic across runs") {

@@ -29,10 +29,12 @@ class ChunkedScanSpec extends SparkSpec {
           java.lang.Double.doubleToRawLongBits(r.getDouble(7)))
       }.sortBy(r => (r._2, r._1))
 
+  private def bounds = ChunkScan.measure[Long](ev, col("event_type"), col("secs"))
+
   test("driftScanChunked == driftScan bit-for-bit (halo-forcing tiny chunks)") {
     val window = rows(EventOps.driftScan(ev, 50))
     assert(window.nonEmpty)
-    val chunked = rows(EventOps.driftScanChunked(ev, 50,
+    val chunked = rows(EventOps.driftScanChunked(ev, 50, bounds,
       fineBuckets = 13, chunkRows = 64))
     assert(chunked.length == window.length &&
       chunked.sameElements(window),
@@ -41,7 +43,7 @@ class ChunkedScanSpec extends SparkSpec {
 
   test("driftScanChunked == driftScan at a second (w, chunk) geometry") {
     val window = rows(EventOps.driftScan(ev, 10))
-    val chunked = rows(EventOps.driftScanChunked(ev, 10,
+    val chunked = rows(EventOps.driftScanChunked(ev, 10, bounds,
       fineBuckets = 7, chunkRows = 16))
     assert(chunked.sameElements(window))
   }

@@ -14,10 +14,9 @@ import graft.SparkSpec
   * value (span == 0 — every row in one fine bucket). */
 class Q13ChunkedSpec extends SparkSpec {
 
-  private def chunked(li: DataFrame, buckets: Int = 7): DataFrame = {
-    val b = li.agg(min("l_extendedprice"), max("l_extendedprice")).head()
-    Analytics.q13Chunked(li, b.getDouble(0), b.getDouble(1), buckets)
-  }
+  private def chunked(li: DataFrame, buckets: Int = 7): DataFrame =
+    Analytics.q13Chunked(li, ChunkScan.measure[Double](li,
+      col("l_returnflag"), col("l_extendedprice")), buckets)
 
   private def compare(li: DataFrame, buckets: Int = 7): Unit = {
     val want = Analytics.q13Window(li).collect()

@@ -122,8 +122,7 @@ class Round4bOpsSpec extends SparkSpec {
       .toDF("event_id", "user_id", "value", "secs")
     val holtTail = AnomalyML.holt(ramp).filter(col("event_id") >= 200)
       .select("resid").collect().map(_.getDouble(0))
-    val ewmaTail = AnomalyML.ewmaChunked(ramp, col("user_id"),
-        col("event_id"), col("secs"), col("value"), chunks = 1)
+    val ewmaTail = graft.streaming.StreamEwma.smooth(ramp.as[EventRow])
       .filter(col("event_id") >= 200)
       .select("resid").collect().map(_.getDouble(0))
     assert(holtTail.forall(r => math.abs(r) < 0.5),
