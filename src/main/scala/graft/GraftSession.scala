@@ -75,7 +75,10 @@ object GraftSession {
     *   (`SPARK_GRAFT_MAX_PARTITION_BYTES`: 16m at sf10, 160m at sf100),
     *   the shape of a fleet that grows with the data.
     * - IO codec: sized to `dataDir` (see [[shuffleCodecFor]]); lz4
-    *   when no dir is given. */
+    *   when no dir is given.
+    * - streaming checkpoints on local paths write through `java.nio`
+    *   ([[streaming.LocalCheckpointFileManager]]): Hadoop's local file
+    *   system costs ~40 ms per checkpoint file, several per batch. */
   private[graft] def localConf(cores: Int, dataDir: String,
       env: String => Option[String]): Map[String, String] = Map(
     "spark.master" -> s"local[$cores]",
@@ -87,6 +90,8 @@ object GraftSession {
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     "spark.io.compression.codec" -> codecFor(dataDir, env),
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[streaming.LocalCheckpointFileManager].getName,
     "spark.ui.enabled" -> "false")
 
   /** Local session: `cores` threads, AQE on, graft extensions (SQL

@@ -50,6 +50,14 @@ class GraftSessionSpec extends AnyFunSuite {
       === "true")
   }
 
+  test("cluster builder keeps Spark's checkpoint file manager") {
+    // cluster checkpoints live on HDFS or S3, where Spark's default
+    // FileContext manager is the right one; the java.nio manager is a
+    // local-session choice only
+    assert(!GraftSession.clusterDefaults.keySet
+      .exists(_.startsWith("spark.sql.streaming.checkpoint")))
+  }
+
   // ---- the local factory's conf, as data (GraftSession.localConf):
   // every main, the specs and the benchmark build their session here,
   // so this table IS the benchmark's session
@@ -65,6 +73,8 @@ class GraftSessionSpec extends AnyFunSuite {
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.io.compression.codec" -> "lz4",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        "graft.streaming.LocalCheckpointFileManager",
       "spark.ui.enabled" -> "false"))
     val small = tmpDirWithBytes(50L << 20)
     assert(GraftSession.localConf(6, small.getAbsolutePath, noEnv)

@@ -611,6 +611,16 @@ class PlanAuditSpec extends SparkSpec {
       s"session env variables read outside GraftSession:\n${knobs.mkString("\n")}")
   }
 
+  test("the checkpoint file manager is chosen once, in GraftSession.localConf") {
+    // every local streaming query writes its checkpoints through the
+    // manager the session factory installs; a per-query override would
+    // give LiveSoak, StateSoak or the benchmark a different write path
+    val hits = mainSourceHits("""checkpointFileManagerClass""",
+      except = Set("GraftSession.scala"))
+    assert(hits.isEmpty,
+      s"checkpoint file manager set outside GraftSession:\n${hits.mkString("\n")}")
+  }
+
   test("the env variables main reads are the eight documented in OPERATIONS.md") {
     // an undocumented variable is an option no test or benchmark turns
     // on; a new one joins OPERATIONS.md's knob table and this set

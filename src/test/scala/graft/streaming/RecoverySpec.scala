@@ -2,8 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.SparkSpec
 
@@ -122,6 +123,134 @@ class RecoverySpec extends SparkSpec {
     }
     assert(restarted == straight,
       s"restarted flags $restarted differ from uninterrupted $straight")
+  }
+
+  test("a checkpoint written by Spark's default manager, killed before its commit, resumes under the local one") {
+    // the shipped session writes checkpoints through
+    // LocalCheckpointFileManager; a checkpoint an older build wrote
+    // through Spark's default manager (checksum sidecars and all) must
+    // resume under it with the batch that never committed re-run
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert(spark.conf.get(key) == classOf[LocalCheckpointFileManager].getName)
+    val sparkDefault = spark.newSession()
+    sparkDefault.conf.unset(key)
+    val keys = Seq("plant_a", "plant_b")
+    def r(k: String, sec: Int, v: Double) = Reading(ts(sec), k, v, 90.0, 50.0)
+    val warm = for (i <- 0 until 60; k <- keys) yield r(k, i, 100.0 + (i % 7) * 0.5)
+    val mid = for (i <- 60 until 70; k <- keys) yield r(k, i, 100.0 + (i % 5) * 0.4)
+    val spiked = keys.flatMap(k =>
+      Seq(r(k, 120, 101.0), r(k, 121, 400.0), r(k, 122, 102.0)))
+    val sink = scala.collection.concurrent.TrieMap[Long, Seq[Flagged]]()
+    /** Feeds `batches` to a fresh MemoryStream of `session` and starts
+      * st3 on `cp`; `crashAt` makes that batch id's sink fail after its
+      * state store committed, i.e. before the commit-log entry. */
+    def start(session: SparkSession, cp: String, batches: Seq[Seq[Reading]],
+        crashAt: Long = -1L) = {
+      val in = MemoryStream[Reading](Encoders.product[Reading], session.sqlContext)
+      batches.foreach(in.addData(_))
+      val q = SlidingDetector.detect(in.toDS())
+        .writeStream
+        .option("checkpointLocation", cp)
+        .foreachBatch { (ds: Dataset[Flagged], id: Long) =>
+          val rows = ds.collect().toSeq
+          if (id == crashAt) throw new IllegalStateException(s"killed in batch $id")
+          sink(id) = rows
+        }
+        .start()
+      (in, q)
+    }
+    def flags() = sink.values.flatten.toSeq.sortBy(f => (f.plant_type, f.ts.getTime))
+    def tmp(prefix: String) =
+      java.nio.file.Files.createTempDirectory(prefix).toString
+    def exists(cp: String, rel: String) =
+      java.nio.file.Files.exists(java.nio.file.Paths.get(cp, rel))
+
+    // ---- phase 1, default manager: batch 0 commits, batch 1 dies
+    // after writing its state delta
+    val cp = tmp("st3cp_default")
+    val (in1, q1) = start(sparkDefault, cp, Seq(warm), crashAt = 1L)
+    q1.processAllAvailable()
+    in1.addData(mid)
+    intercept[StreamingQueryException](q1.processAllAvailable())
+    q1.stop()
+    assert(exists(cp, "commits/0") && exists(cp, "commits/.0.crc"),
+      "batch 0 must have committed through the checksummed default manager")
+    assert(exists(cp, "offsets/1") && !exists(cp, "commits/1"),
+      "the kill must land between batch 1's offsets and its commit")
+    val deltas = (0 until spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      .count(p => exists(cp, s"state/0/$p/2.delta"))
+    assert(deltas > 0, "batch 1's state delta must be written before the kill")
+
+    // ---- phase 2, shipped session: batch 1 re-runs, then the spike
+    val (in2, q2) = start(spark, cp, Seq(warm, mid))
+    q2.processAllAvailable()
+    in2.addData(spiked)
+    q2.processAllAvailable()
+    q2.stop()
+    assert(sink.keySet == Set(0L, 1L, 2L), "batch 1 must re-run after the resume")
+    assert(exists(cp, "commits/1") && exists(cp, "commits/2"))
+    assert(!exists(cp, "commits/.1.crc") && !exists(cp, "commits/.2.crc"),
+      "the resumed query must write through the local manager")
+    val resumed = flags()
+
+    sink.clear()
+    val (in3, q3) = start(spark, tmp("st3cp_straight"), Seq(warm))
+    q3.processAllAvailable()
+    in3.addData(mid)
+    q3.processAllAvailable()
+    in3.addData(spiked)
+    q3.processAllAvailable()
+    q3.stop()
+    val straight = flags()
+    assert(straight.exists(_.power_output == 400.0), s"no spike flagged: $straight")
+    assert(resumed == straight,
+      s"resumed flags $resumed differ from uninterrupted $straight")
+  }
+
+  test("RocksDB-provider st8 state survives a restart after 3 batches; alarms equal an uninterrupted run") {
+    // the provider StateSoak and LiveSoak configure: its checkpoint is
+    // a tree of changelog/zip/SST files, all through the manager
+    val rocks = spark.newSession()
+    rocks.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val keys = (0 until 3).map(k => s"plant_$k")
+    def r(k: String, sec: Int, v: Double) = Reading(ts(sec), k, v, 0.0, 50.0)
+    def stationary(from: Int, until: Int) = for (i <- from until until; k <- keys)
+      yield r(k, i, if (i % 2 == 0) 101.0 else 99.0)
+    // 3 batches build and hold each key's 50-reading baseline (ending
+    // on a 99 so S+ sits at 0); the 4th, after the restart, shifts +3
+    val before = Seq(stationary(0, 30), stationary(30, 50), stationary(50, 54))
+    val shift = for (i <- 54 until 57; k <- keys) yield r(k, i, 103.0)
+    def run(restart: Boolean): Seq[DriftAlarm] = {
+      val cp = java.nio.file.Files.createTempDirectory("st8rocks").toString
+      val sink = scala.collection.concurrent.TrieMap[Long, Seq[DriftAlarm]]()
+      val in = MemoryStream[Reading](Encoders.product[Reading], rocks.sqlContext)
+      def start() = DriftDetector.detect(in.toDS())
+        .writeStream
+        .option("checkpointLocation", cp)
+        .foreachBatch { (ds: Dataset[DriftAlarm], id: Long) =>
+          sink(id) = ds.collect().toSeq; ()
+        }
+        .start()
+      val q1 = start()
+      before.foreach { b => in.addData(b); q1.processAllAvailable() }
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(cp, "commits/2")) &&
+        !java.nio.file.Files.exists(java.nio.file.Paths.get(cp, "commits/3")),
+        "3 batches before the restart")
+      val q2 = if (restart) { q1.stop(); start() } else q1
+      in.addData(shift)
+      q2.processAllAvailable()
+      q2.stop()
+      sink.values.flatten.toSeq.sortBy(a => (a.plant_type, a.ts.getTime))
+    }
+    val restarted = run(restart = true)
+    val straight = run(restart = false)
+    // a fresh store would still be baselining and raise nothing
+    assert(restarted.length == keys.length &&
+      restarted.forall(a => a.side == "up" && a.stat == 7.5),
+      s"every key must alarm once from its recovered baseline: $restarted")
+    assert(restarted == straight,
+      s"restarted alarms $restarted differ from uninterrupted $straight")
   }
 
   test("st8 recovery at 10^4 keys: every key's state survives, alarms exactly once") {
