@@ -3,21 +3,18 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.functions.Pct
+import graft.functions.ExactStats.{decimalSum, dsum}
 import graft.Exec._
 import org.apache.spark.sql.GraftShim
 
 /** Core relational surface (SURVEY.md §2.A).
   *
   * Float discipline (SURVEY §6): every SUM over a double column goes
-  * through an exact DECIMAL(18,6) intermediate and is cast back to
-  * double. The per-row cast double→decimal is uniquely determined (a
-  * tie at the 6th fractional digit is not binary-representable), the
-  * decimal sum is exact regardless of partition/merge order, and the
-  * final decimal→double cast is a single correctly-rounded step — so
+  * through [[graft.functions.ExactStats.dsum]], an exact DECIMAL(18,6)
+  * intermediate cast back to double (a tie at the 6th fractional digit
+  * is not binary-representable, so the per-row cast is unique) — so
   * the DuckDB oracle built the same way is bit-identical even though
   * Spark sums in parallel. Derived values (ratios, z-scores) are then
   * plain double arithmetic over identical inputs on both sides.
@@ -28,10 +25,6 @@ import org.apache.spark.sql.GraftShim
   * tables (nation) are broadcast, and AQE handles the rest.
   */
 object Analytics {
-
-  /** Exact double sum via DECIMAL(18,6); deterministic across partitions. */
-  private[graft] def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(18, 6))).cast("double")
 
   /** q1_agg — pricing summary: groupBy aggregate with derived expressions.
     * Re-expresses the reference's per-entity metric aggregation
@@ -403,7 +396,6 @@ object Analytics {
     * [sql-oracle]. */
   def q17IncrementalAgg(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.PortableHash
-    def dpart(c: Column) = sum(c.cast(DecimalType(18, 6)))
     val li = Tables.lineitem(s, dir)
       .select(col("l_returnflag"), col("l_linestatus"), col("l_quantity"),
         col("l_extendedprice"),
@@ -413,8 +405,8 @@ object Analytics {
           .as("is_delta"))
     def side(delta: Boolean) = li.filter(col("is_delta") === delta)
       .groupBy("l_returnflag", "l_linestatus")
-      .agg(count(lit(1)).as("n"), dpart(col("l_quantity")).as("sq"),
-        dpart(col("l_extendedprice")).as("sp"))
+      .agg(count(lit(1)).as("n"), decimalSum(col("l_quantity")).as("sq"),
+        decimalSum(col("l_extendedprice")).as("sp"))
     // the merge: union of partial-aggregate ROWS, one tiny groupBy over
     // ≤ groups×2 rows — the fact is never rescanned
     side(delta = false).withColumn("src", lit("base"))
@@ -554,8 +546,7 @@ object Analytics {
     def flagged(f: String): Column =
       sum(when(col("l_returnflag") === f, 1L).otherwise(0L))
     def flaggedPrice(f: String): Column =
-      sum(when(col("l_returnflag") === f, col("l_extendedprice")).otherwise(lit(0.0))
-        .cast(DecimalType(18, 6))).cast("double")
+      dsum(when(col("l_returnflag") === f, col("l_extendedprice")).otherwise(lit(0.0)))
     Tables.lineitem(s, dir)
       .groupBy("l_linestatus")
       .agg(flagged("R").as("n_r"), flagged("A").as("n_a"), flagged("N").as("n_n"),
@@ -600,16 +591,6 @@ object Analytics {
     * `git show acf731b:BASELINE_SELF.md`). Small
     * inputs (every group ≤ smallN) take the buffered builtin unchanged. */
   def q9Percentile(s: SparkSession, dir: String): DataFrame = {
-    if (Pct.approxEnabled(s))
-      // the documented session switch to the mergeable GK estimate
-      // (Pct scaladoc) still short-circuits the exact machinery
-      return Tables.lineitem(s, dir)
-        .groupBy("l_returnflag")
-        .agg(
-          round(Pct.of(s, "l_quantity", 0.5), 6).as("med_qty"),
-          round(Pct.of(s, "l_extendedprice", 0.9), 6).as("p90_price"),
-          round(Pct.of(s, "l_extendedprice", 0.99), 6).as("p99_price"))
-        .orderBy("l_returnflag")
     import DistributedPercentile.Target
     DistributedPercentile.exact(Tables.lineitem(s, dir), "l_returnflag",
       Seq(Target("l_quantity", 0.5, "med_qty"),

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
-import graft.functions.Pct
+import graft.functions.ExactStats
+import graft.functions.ExactStats.{dsum, dsumProduct, percentile}
 import graft.ml.GraftIsolationForest
 import graft.Exec._
 
@@ -41,8 +42,8 @@ object AnomalyML {
     * app3_ML.py:164-166): the cut is the per-key 95th percentile of the
     * key's own scores, self-calibrating as composition shifts — never a
     * fixed score constant. The quantile is one map-side-combined agg
-    * broadcast back; `percentile` is the oracle-exactness choice — at
-    * real scale swap `approx_percentile`, same plan shape.
+    * broadcast back; exact `percentile` is the oracle-exactness choice
+    * (e14_approx_quantile is the bounded-memory Greenwald–Khanna form).
     *
     * The training pool is a deterministic pseudo-random sample per key:
     * a cheap per-key count picks a hash-filter rate that leaves ≥ ~4k
@@ -106,7 +107,7 @@ object AnomalyML {
     // makes the cut value itself engine-stable (the q9 discipline),
     // which is what lets a1 carry a full DuckDB hash oracle
     val cuts = scored.groupBy("event_type")
-      .agg(round(Pct.of(s, "score", 0.95), 6).as("if_cut"))
+      .agg(round(percentile("score", 0.95), 6).as("if_cut"))
     val out = scored.join(broadcast(cuts), "event_type")
       .filter(col("score") > col("if_cut"))
       .select(col("event_id"), col("event_type"), col("value"),
@@ -168,11 +169,11 @@ object AnomalyML {
         col("dc.dist").as("dist"))
       .cache()
     // fence at the exact 98th percentile of centroid distance (the
-    // synthetic clusters are tight enough that mean+2σ flags nothing);
-    // at real scale swap percentile → approx_percentile, same plan shape.
+    // synthetic clusters are tight enough that mean+2σ flags nothing;
+    // e14_approx_quantile is the bounded-memory Greenwald–Khanna form).
     // Rounded to 6 dp so the filter threshold is engine-stable — the
     // same discipline as a1's cut, enabling the DuckDB hash oracle.
-    val fence = scored.agg(round(Pct.of(s, "dist", 0.98), 6))
+    val fence = scored.agg(round(percentile("dist", 0.98), 6))
       .collect()(0).getDouble(0)
     // materialize the (bounded: 2% of rows) result off the cache, then
     // drop both caches — they must not outlive the operator call in a
@@ -206,15 +207,13 @@ object AnomalyML {
     * decimal-sum formula (the statsByKey discipline) is bit-identical
     * everywhere, which is what made a4's r4 oracle conversion
     * possible. */
-  private def cusumStats(base: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
+  private def cusumStats(base: DataFrame): DataFrame =
     base.groupBy("key").agg(
         count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 6))).cast("double").as("s1"),
-        sum((col("value") * col("value")).cast(DecimalType(28, 10))).cast("double").as("s2"))
+        dsum(col("value")).as("s1"),
+        dsumProduct(col("value"), col("value")).as("s2"))
       .select(col("key"), (col("s1") / col("n")).as("mean"),
-        sqrt((col("s2") - col("s1") * col("s1") / col("n")) / col("n")).as("sd"))
-  }
+        ExactStats.sd(col("n"), col("s1"), col("s2"), col("n")).as("sd"))
 
   def cusum(df: DataFrame, keyCol: Column, idCol: Column, tsCol: Column,
       valCol: Column, slackK: Double = 0.5, alarmH: Double = 5.0,
@@ -512,24 +511,24 @@ object AnomalyML {
     * get_json_object form) at 0 mismatches; cast("") -> null keeps the
     * isNotNull contract on malformed rows. */
   def a5Mahalanobis(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    def dec18(c: Column) = sum(c.cast(DecimalType(18, 6))).cast("double")
-    def dec28(c: Column) = sum(c.cast(DecimalType(28, 10))).cast("double")
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("event_type"), col("value").as("x"),
         propsY.as("y"))
       .filter(col("y").isNotNull)
+    // sample covariance from the exact sums
+    def cov(sx: String, sy: String, sxy: String) =
+      ExactStats.comoment(col("n"), col(sx), col(sy), col(sxy)) / (col("n") - lit(1))
     val st = ev.groupBy("event_type").agg(
         count(lit(1)).as("n"),
-        dec18(col("x")).as("sx"), dec18(col("y")).as("sy"),
-        dec28(col("x") * col("x")).as("sxx"),
-        dec28(col("y") * col("y")).as("syy"),
-        dec28(col("x") * col("y")).as("sxy"))
+        dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),
+        dsumProduct(col("x"), col("x")).as("sxx"),
+        dsumProduct(col("y"), col("y")).as("syy"),
+        dsumProduct(col("x"), col("y")).as("sxy"))
       .withColumn("mx", col("sx") / col("n"))
       .withColumn("my", col("sy") / col("n"))
-      .withColumn("cxx", (col("sxx") - col("sx") * col("sx") / col("n")) / (col("n") - lit(1)))
-      .withColumn("cyy", (col("syy") - col("sy") * col("sy") / col("n")) / (col("n") - lit(1)))
-      .withColumn("cxy", (col("sxy") - col("sx") * col("sy") / col("n")) / (col("n") - lit(1)))
+      .withColumn("cxx", cov("sx", "sx", "sxx"))
+      .withColumn("cyy", cov("sy", "sy", "syy"))
+      .withColumn("cxy", cov("sx", "sy", "sxy"))
       .withColumn("det", col("cxx") * col("cyy") - col("cxy") * col("cxy"))
     val dx = col("x") - col("mx")
     val dy = col("y") - col("my")
@@ -558,8 +557,8 @@ object AnomalyML {
     * mean untouched.
     *
     * Scale: span midpoints and decile thresholds are two tiny per-key
-    * aggregates broadcast back (thresholds via [[Pct.ofArray]] — exact
-    * default, mergeable approx at 100 TB); binning is a narrow map
+    * aggregates broadcast back (thresholds via one exact
+    * [[graft.functions.ExactStats.percentiles]] array); binning is a narrow map
     * (9-element array filter per row); the histogram is one map-side-
     * combined (key, side, bin) count. Nothing quadratic, nothing
     * key-skew-sensitive beyond the count itself. [sql-oracle]
@@ -567,7 +566,6 @@ object AnomalyML {
     * bit-stable — the i9 convention). */
   def histDrift(ev: DataFrame): DataFrame = {
     val deciles = (1 to 9).map(_ / 10.0)
-    val s = ev.sparkSession
     val spans = ev.groupBy("event_type")
       .agg(min("sec").as("lo"), max("sec").as("hi"))
       .withColumn("mid", expr("(lo + hi) div 2"))
@@ -577,7 +575,7 @@ object AnomalyML {
         .otherwise("cur"))
     val thr = sided.filter(col("side") === "ref")
       .groupBy("event_type")
-      .agg(Pct.ofArray(s, "value", deciles).as("thr0"))
+      .agg(ExactStats.percentiles("value", deciles).as("thr0"))
       .withColumn("thr", expr("transform(thr0, t -> round(t, 6))"))
       .select("event_type", "thr")
     val binned = sided.join(broadcast(thr), "event_type")
@@ -623,8 +621,7 @@ object AnomalyML {
     * no shuffle of the corpus); the fitted model broadcast is
     * 64×(k+1) doubles; scoring is a narrow map (broadcast-model UDF —
     * the a1/a3/s3/s4 scoring regime); the contamination cut is one
-    * percentile aggregate routed through [[Pct]] (exact by default,
-    * mergeable approx at 100 TB). [rows-only]: eigendecomposition is
+    * exact percentile aggregate. [rows-only]: eigendecomposition is
     * engine-specific; the spec pins a planted off-subspace outlier to
     * the top error, near-zero error for in-subspace rows, and the
     * flag-fraction contract. */
@@ -660,7 +657,6 @@ object AnomalyML {
 
   def pcaOutlier(e: DataFrame, k: Int = 8, contamination: Double = 0.05,
       preFit: Option[(Array[Double], Array[Double])] = None): DataFrame = {
-    val s = e.sparkSession
     val (mean, pcValues) = preFit.getOrElse(pcaFit(e, k))
     // codegen residual scan (r8, VERDICT r7 item 2): the last
     // model-scoring UDF on a full-corpus scan, converted to the
@@ -674,7 +670,7 @@ object AnomalyML {
     // percentile interpolation can differ in the last ulp, and the cut
     // sits in a FILTER — rounding makes the cut engine-stable, which
     // is what lets a7 carry a literal-embedding DuckDB oracle (r7)
-    val cut = scored.agg(round(Pct.of(s, "err", 1.0 - contamination), 6))
+    val cut = scored.agg(round(percentile("err", 1.0 - contamination), 6))
       .first().getDouble(0)
     val out = scored
       .filter(col("err") > cut)

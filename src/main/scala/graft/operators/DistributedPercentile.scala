@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
+import graft.functions.ExactStats
+
 /** Exact per-group interpolated percentiles (R-7, ≡ Spark `percentile`
   * ≡ DuckDB `quantile_cont`) computed by DISTRIBUTED SELECTION instead
   * of per-group value buffering.
@@ -95,10 +97,10 @@ object DistributedPercentile {
   private def builtinExact(df: DataFrame, groupCol: String,
       targets: Seq[Target]): DataFrame =
     df.groupBy(col(groupCol)).agg(
-      expr(s"percentile(${targets.head.valueCol}, ${targets.head.p})")
+      ExactStats.percentile(targets.head.valueCol, targets.head.p)
         .as(targets.head.outName),
       targets.tail.map(t =>
-        expr(s"percentile(${t.valueCol}, ${t.p})").as(t.outName)): _*)
+        ExactStats.percentile(t.valueCol, t.p).as(t.outName)): _*)
 
   def exact(df: DataFrame, groupCol: String, targets: Seq[Target],
       accuracy: Int = 10000, smallN: Long = 100000): DataFrame = {

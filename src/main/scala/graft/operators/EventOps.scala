@@ -6,7 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.functions.Pct
+import graft.functions.ExactStats
+import graft.functions.ExactStats.{dsum, dsumProduct, percentile}
 import graft.Exec._
 
 /** Event/time-series analytics (SURVEY.md §2.B) — the batch twins of the
@@ -17,24 +18,25 @@ import graft.Exec._
   * IsolationForest loop (app3_ML.py:143-182); the IF itself is
   * graft.ml.GraftIsolationForest.
   *
-  * Determinism discipline (SURVEY §6): group stats flow through exact
-  * decimal sums; z-scores are then identical double arithmetic on both
+  * Determinism discipline (SURVEY §6): group stats flow through
+  * [[graft.functions.ExactStats]]'s exact decimal sums and exact
+  * percentiles; z-scores are then identical double arithmetic on both
   * engines. Time keys are floor-second epochs so Spark's µs timestamps
   * and DuckDB's ns timestamps agree. Every output is uniquely ordered.
   */
 object EventOps {
 
-  private[graft] def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 6))).cast("double")
-  /** Exact sum of squares (values ≤ ~1e3, rows ≤ ~1e6 ⇒ fits 28,10). */
-  private def dsumSq(c: Column): Column = sum((c * c).cast(DecimalType(28, 10))).cast("double")
-
   /** Per-group mean/sd via the exact-sum formula sqrt((Σx² − (Σx)²/n)/(n−1)) —
     * written identically in the DuckDB oracle so both engines agree bitwise. */
   private def statsByKey(df: DataFrame, keys: Seq[String], v: Column): DataFrame =
     df.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n"), dsum(v).as("s1"), dsumSq(v).as("s2"))
+      .agg(count(lit(1)).as("n"), dsum(v).as("s1"), dsumProduct(v, v).as("s2"))
       .withColumn("mean", col("s1") / col("n"))
-      .withColumn("sd", sqrt((col("s2") - col("s1") * col("s1") / col("n")) / (col("n") - lit(1))))
+      .withColumn("sd", sampleSd)
+
+  /** The sample σ of a (n, s1, s2) stats frame. */
+  private def sampleSd: Column =
+    ExactStats.sd(col("n"), col("s1"), col("s2"), col("n") - lit(1))
 
   /** e1_json_parse — JSON prop extraction from the `props` payload column
     * (the reference's from_json stage, app3_ML.py:89-90). */
@@ -109,14 +111,14 @@ object EventOps {
   /** e6_robust — median/MAD robust outliers (|robust z| > 3.5), two exact
     * percentile passes + broadcast joins. (Exact `percentile` buffers a
     * group's values in the aggregator — required for the bit-exact
-    * oracle; at real scale swap in approx_percentile/t-digest, same
-    * plan shape.) */
+    * oracle; the bounded-memory form of the same quantiles is e14's
+    * Greenwald–Khanna summary.) */
   def e6Robust(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).select(col("event_id"), col("event_type"), col("value"))
-    val med = ev.groupBy("event_type").agg(Pct.of(s, "value", 0.5).as("med"))
+    val med = ev.groupBy("event_type").agg(percentile("value", 0.5).as("med"))
     val withAd = ev.join(broadcast(med), "event_type")
       .withColumn("ad", abs(col("value") - col("med")))
-    val mad = withAd.groupBy("event_type").agg(Pct.of(s, "ad", 0.5).as("mad"))
+    val mad = withAd.groupBy("event_type").agg(percentile("ad", 0.5).as("mad"))
     val rz = (col("value") - col("med")) / (lit(1.4826) * col("mad"))
     withAd.join(broadcast(mad), "event_type")
       .filter(abs(rz) > 3.5)
@@ -128,7 +130,7 @@ object EventOps {
   def e7Iqr(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).select(col("event_id"), col("event_type"), col("value"))
     val st = ev.groupBy("event_type").agg(
-      Pct.of(s, "value", 0.25).as("q1"), Pct.of(s, "value", 0.75).as("q3"))
+      percentile("value", 0.25).as("q1"), percentile("value", 0.75).as("q3"))
       .withColumn("lo", col("q1") - lit(1.5) * (col("q3") - col("q1")))
       .withColumn("hi", col("q3") + lit(1.5) * (col("q3") - col("q1")))
     ev.join(broadcast(st), "event_type")
@@ -179,15 +181,14 @@ object EventOps {
       .withColumn("mh", col("s1h") / col("nh"))
       .select("event_type", "hr", "mh")
     val resid = col("value") - col("mh")
+    val ss = ExactStats.comoment(col("n"), col("s1"), col("s1"), col("s2"))
     ev.join(broadcast(prof), Seq("event_type", "hr"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("s1"),
-        dsumSq(col("value")).as("s2"),
-        sum((resid * resid).cast(org.apache.spark.sql.types.DecimalType(28, 10)))
-          .cast("double").as("sr2"))
-      .filter(col("s2") - col("s1") * col("s1") / col("n") > 0)
-      .withColumn("strength",
-        round(lit(1.0) - col("sr2") / (col("s2") - col("s1") * col("s1") / col("n")), 6))
+        dsumProduct(col("value"), col("value")).as("s2"),
+        dsumProduct(resid, resid).as("sr2"))
+      .filter(ss > 0)
+      .withColumn("strength", round(lit(1.0) - col("sr2") / ss, 6))
       .select(col("event_type"), col("n"), col("strength"))
       .orderBy("event_type")
   }
@@ -209,28 +210,7 @@ object EventOps {
   def e23DetectorScorecard(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("event_type"), col("value")).cache()
-    val st = ev.groupBy("event_type").agg(
-        count(lit(1)).as("n"), dsum(col("value")).as("s1"),
-        dsumSq(col("value")).as("s2"),
-        Pct.of(s, "value", 0.5).as("med"),
-        Pct.of(s, "value", 0.25).as("q1"),
-        Pct.of(s, "value", 0.75).as("q3"))
-      .withColumn("mean", col("s1") / col("n"))
-      .withColumn("sd", sqrt((col("s2") - col("s1") * col("s1") / col("n")) / (col("n") - lit(1))))
-      .withColumn("lo", col("q1") - lit(1.5) * (col("q3") - col("q1")))
-      .withColumn("hi", col("q3") + lit(1.5) * (col("q3") - col("q1")))
-    val mad = ev.join(broadcast(st.select("event_type", "med")), "event_type")
-      .withColumn("ad", abs(col("value") - col("med")))
-      .groupBy("event_type").agg(Pct.of(s, "ad", 0.5).as("mad"))
-    val z = (col("value") - col("mean")) / col("sd")
-    val rz = (col("value") - col("med")) / (lit(1.4826) * col("mad"))
-    val zf = when(abs(z) > 3, 1L).otherwise(0L)
-    val rf = when(abs(rz) > 3.5, 1L).otherwise(0L)
-    val qf = when(col("value") < col("lo") || col("value") > col("hi"), 1L)
-      .otherwise(0L)
-    val out = ev.join(broadcast(st), "event_type")
-      .join(broadcast(mad), "event_type")
-      .withColumn("zf", zf).withColumn("rf", rf).withColumn("qf", qf)
+    val out = detectorFlags(ev)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"), sum(col("zf")).as("n_z"),
         sum(col("rf")).as("n_mad"), sum(col("qf")).as("n_iqr"),
@@ -430,20 +410,7 @@ object EventOps {
     val a = byMin.select(col("m"), col("event_type").as("ta"), col("v").as("va"))
     val b = byMin.select(col("m"), col("event_type").as("tb"), col("v").as("vb"))
     val pairs = a.join(b, "m").filter(col("ta") < col("tb"))
-    val st = pairs.groupBy("ta", "tb").agg(
-      count(lit(1)).as("n"),
-      dsum(col("va")).as("sx"), dsum(col("vb")).as("sy"),
-      sum((col("va") * col("va")).cast(DecimalType(28, 10))).cast("double").as("sxx"),
-      sum((col("vb") * col("vb")).cast(DecimalType(28, 10))).cast("double").as("syy"),
-      sum((col("va") * col("vb")).cast(DecimalType(28, 10))).cast("double").as("sxy"))
-    // degenerate pairs (single shared minute, or a flat series) have no
-    // defined correlation — excluded with the IDENTICAL predicate on
-    // both engines, which also keeps the quotient division-by-zero-free
-    val varx = col("sxx") - col("sx") * col("sx") / col("n")
-    val vary = col("syy") - col("sy") * col("sy") / col("n")
-    val r = (col("sxy") - col("sx") * col("sy") / col("n")) / sqrt(varx * vary)
-    st.filter(col("n") > 1 && varx > 0 && vary > 0)
-      .select(col("ta"), col("tb"), col("n"), round(r, 6).as("r"))
+    ExactStats.pearson(pairs, Seq("ta", "tb"), col("va"), col("vb"))
       .orderBy("ta", "tb")
   }
 
@@ -491,22 +458,46 @@ object EventOps {
       .withColumn("m2", col("m") + col("lag") * 60)
     val b = byMin.select(col("m").as("m2"), col("event_type"),
       col("v").as("vb"))
-    val st = a.join(b, Seq("event_type", "m2")).groupBy("event_type", "lag")
-      .agg(
-        count(lit(1)).as("n"),
-        dsum(col("va")).as("sx"), dsum(col("vb")).as("sy"),
-        sum((col("va") * col("va")).cast(DecimalType(28, 10))).cast("double").as("sxx"),
-        sum((col("vb") * col("vb")).cast(DecimalType(28, 10))).cast("double").as("syy"),
-        sum((col("va") * col("vb")).cast(DecimalType(28, 10))).cast("double").as("sxy"))
-    val varx = col("sxx") - col("sx") * col("sx") / col("n")
-    val vary = col("syy") - col("sy") * col("sy") / col("n")
-    val r = (col("sxy") - col("sx") * col("sy") / col("n")) / sqrt(varx * vary)
-    val out = st.filter(col("n") > 1 && varx > 0 && vary > 0)
-      .select(col("event_type"), col("lag"), col("n"), round(r, 6).as("r"))
+    val out = ExactStats.pearson(a.join(b, Seq("event_type", "m2")),
+        Seq("event_type", "lag"), col("va"), col("vb"))
       .orderBy("event_type", "lag")
       .finishIf()
     byMin.unpersistIf()
     out
+  }
+
+  /** e17/e23's per-event flag frame over a cached (event_id, event_type,
+    * value) projection: each event with 0/1 flags `zf` (e5's |z| > 3),
+    * `rf` (e6's |robust z| > 3.5) and `qf` (e7's IQR fence). One
+    * combined per-type aggregate gives the z-stats, the median and the
+    * quartile fences off the same scan; MAD is a percentile of
+    * |value − med| — inherently a second pass, but over the cached
+    * projection, not a fact rescan. Each detector's expression is the
+    * standalone detector's, so the oracles (their predicates verbatim)
+    * hash-match. */
+  private def detectorFlags(ev: DataFrame): DataFrame = {
+    val st = ev.groupBy("event_type").agg(
+        count(lit(1)).as("n"), dsum(col("value")).as("s1"),
+        dsumProduct(col("value"), col("value")).as("s2"),
+        percentile("value", 0.5).as("med"),
+        percentile("value", 0.25).as("q1"),
+        percentile("value", 0.75).as("q3"))
+      .withColumn("mean", col("s1") / col("n"))
+      .withColumn("sd", sampleSd)
+      .withColumn("lo", col("q1") - lit(1.5) * (col("q3") - col("q1")))
+      .withColumn("hi", col("q3") + lit(1.5) * (col("q3") - col("q1")))
+    val mad = ev.join(broadcast(st.select("event_type", "med")), "event_type")
+      .withColumn("ad", abs(col("value") - col("med")))
+      .groupBy("event_type").agg(percentile("ad", 0.5).as("mad"))
+    val z = (col("value") - col("mean")) / col("sd")
+    val rz = (col("value") - col("med")) / (lit(1.4826) * col("mad"))
+    ev.join(broadcast(st), "event_type")
+      .join(broadcast(mad), "event_type")
+      .withColumn("zf", when(abs(z) > 3, 1L).otherwise(0L))
+      .withColumn("rf", when(abs(rz) > 3.5, 1L).otherwise(0L))
+      .withColumn("qf",
+        when(col("value") < col("lo") || col("value") > col("hi"), 1L)
+          .otherwise(0L))
   }
 
   /** e17_ensemble — consensus outliers: an event flags only when ≥ 2 of
@@ -530,32 +521,8 @@ object EventOps {
   def e17Ensemble(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("event_type"), col("value")).cache()
-    // one combined per-type aggregate: z-stats (e5), median (e6's
-    // first pass) and quartile fences (e7) off the same scan
-    val st = ev.groupBy("event_type").agg(
-        count(lit(1)).as("n"), dsum(col("value")).as("s1"),
-        dsumSq(col("value")).as("s2"),
-        Pct.of(s, "value", 0.5).as("med"),
-        Pct.of(s, "value", 0.25).as("q1"),
-        Pct.of(s, "value", 0.75).as("q3"))
-      .withColumn("mean", col("s1") / col("n"))
-      .withColumn("sd", sqrt((col("s2") - col("s1") * col("s1") / col("n")) / (col("n") - lit(1))))
-      .withColumn("lo", col("q1") - lit(1.5) * (col("q3") - col("q1")))
-      .withColumn("hi", col("q3") + lit(1.5) * (col("q3") - col("q1")))
-    // MAD is a percentile of |value − med| — inherently a second pass,
-    // but over the cached projection, not a fact rescan
-    val mad = ev.join(broadcast(st.select("event_type", "med")), "event_type")
-      .withColumn("ad", abs(col("value") - col("med")))
-      .groupBy("event_type").agg(Pct.of(s, "ad", 0.5).as("mad"))
-    val z = (col("value") - col("mean")) / col("sd")
-    val rz = (col("value") - col("med")) / (lit(1.4826) * col("mad"))
-    val zf = when(abs(z) > 3, 1L).otherwise(0L)
-    val rf = when(abs(rz) > 3.5, 1L).otherwise(0L)
-    val qf = when(col("value") < col("lo") || col("value") > col("hi"), 1L)
-      .otherwise(0L)
-    val out = ev.join(broadcast(st), "event_type")
-      .join(broadcast(mad), "event_type")
-      .withColumn("votes", zf + rf + qf)
+    val out = detectorFlags(ev)
+      .withColumn("votes", col("zf") + col("rf") + col("qf"))
       .filter(col("votes") >= 2)
       .select(col("event_id"), col("event_type"), col("value"), col("votes"))
       .orderBy("event_id")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.PortableHash
+import graft.functions.{ExactStats, PortableHash}
 
 /** Deterministic sampling / split / mixture utilities for training-data
   * pipelines (SURVEY.md §2.I).
@@ -334,9 +334,8 @@ object Sampling {
     * (i5's discipline) — the easy→hard curriculum layout, where
     * "easy" = cleanest text, with no quality-rank bias inside a band.
     *
-    * Scale: quartile thresholds are one percentile aggregate (exact by
-    * default, approx_percentile under the [[graft.functions.Pct]]
-    * session flag at 100 TB) collected as THREE doubles — a KB-scale
+    * Scale: quartile thresholds are one exact percentile aggregate
+    * ([[graft.functions.ExactStats.percentile]]) collected as THREE doubles — a KB-scale
     * pull, inlined as literals so banding is a narrow map. The global
     * position is the i5 two-phase prefix: composite range-buckets
     * (band, top-9-hash-bits) count once, the driver stitches ≤4×512
@@ -349,9 +348,9 @@ object Sampling {
     val q = graft.operators.TextOps.qualityOver(Tables.documents(s, dir))
       .select(col("doc_id"), col("quality"))
     val Array(t1, t2, t3) = q.agg(
-        round(graft.functions.Pct.of(s, "quality", 0.25), 6).as("t1"),
-        round(graft.functions.Pct.of(s, "quality", 0.5), 6).as("t2"),
-        round(graft.functions.Pct.of(s, "quality", 0.75), 6).as("t3"))
+        round(ExactStats.percentile("quality", 0.25), 6).as("t1"),
+        round(ExactStats.percentile("quality", 0.5), 6).as("t2"),
+        round(ExactStats.percentile("quality", 0.75), 6).as("t3"))
       .collect()(0).toSeq.map(_.asInstanceOf[Double]).toArray
     val band = (col("quality") > t1).cast("int") +
       (col("quality") > t2).cast("int") + (col("quality") > t3).cast("int")

@@ -51,7 +51,7 @@ object SessionWindow {
         count(lit(1)).as("n_events"),
         min(col("ts").cast("long")).as("start_s"),
         max(col("ts").cast("long")).as("end_s"),
-        graft.operators.EventOps.dsum(col("value")).as("sum_value")),
+        graft.functions.ExactStats.dsum(col("value")).as("sum_value")),
       gap = gap, watermark = watermark)
       .select(col("user_id"), col("n_events"), col("start_s"),
         col("end_s"), col("sum_value"))

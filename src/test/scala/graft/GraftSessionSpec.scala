@@ -12,16 +12,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * the at-scale class). A silent flip of any of these is a perf
   * regression at one scale or the other, so the choice is spec-pinned.
   */
-class GraftSessionSpec extends AnyFunSuite {
+class GraftSessionSpec extends AnyFunSuite with TempDirs {
 
   private def tmpDirWithBytes(n: Long): java.io.File = {
-    val d = java.nio.file.Files.createTempDirectory("graft_codec").toFile
-    d.deleteOnExit()
+    val d = tempDir("graft_codec").toFile
     val f = new java.io.File(d, "documents.parquet")
     // sparse file: size metadata without writing n bytes
     val raf = new java.io.RandomAccessFile(f, "rw")
     try raf.setLength(n) finally raf.close()
-    f.deleteOnExit()
     d
   }
 

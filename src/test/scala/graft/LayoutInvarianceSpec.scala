@@ -38,8 +38,7 @@ class LayoutInvarianceSpec extends SparkSpec {
   /** sf0.001 rewritten to a different physical layout: 7 files per
     * table, rows round-robin-shuffled. Built once per suite. */
   lazy val altDir: String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-alt-layout").toFile.getAbsolutePath
+    val dir = tempDir("graft-alt-layout").toFile.getAbsolutePath
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
     tables.foreach { t =>

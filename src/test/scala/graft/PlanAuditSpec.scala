@@ -641,6 +641,24 @@ class PlanAuditSpec extends SparkSpec {
     assert(hits.isEmpty, s"markdown path literals in main:\n${hits.mkString("\n")}")
   }
 
+  test("the exact-sum decimal types are spelled only in ExactStats") {
+    // DECIMAL(18,6) sums and DECIMAL(28,10) product sums are what make
+    // the oracle hashes engine-stable; a second hand-written copy can
+    // drift from the one the helpers and their oracles share (oracle
+    // SQL spells DECIMAL(18,6) and is not matched)
+    val hits = mainSourceHits("""DecimalType\(\s*(18\s*,\s*6|28\s*,\s*10)\s*\)""",
+      except = Set("ExactStats.scala"))
+    assert(hits.isEmpty,
+      s"exact-sum decimal types outside ExactStats:\n${hits.mkString("\n")}")
+  }
+
+  test("main has no approx-percentile session switch") {
+    // percentiles are exact everywhere; the bounded-memory estimate is
+    // its own operator (e14), not a conf key that swaps every caller
+    val hits = mainSourceHits("""spark\.graft\.approx""")
+    assert(hits.isEmpty, s"approx session keys in main:\n${hits.mkString("\n")}")
+  }
+
   test("keyed stateful operators set no processing-time timeouts") {
     // every flatMapGroupsWithState keeps state per key with NoTimeout;
     // a timeout branch no caller enables ships without ever running

@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs: the shipped factory at 4 cores
   * (the test warehouse dir comes in as a `spark.*` system property,
-  * see build.sbt). */
-trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+  * see build.sbt), plus [[TempDirs]]' suite-scoped scratch dirs. */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
   lazy val spark: SparkSession =
     GraftSession.local(4, appName = getClass.getSimpleName)
 

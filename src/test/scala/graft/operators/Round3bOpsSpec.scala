@@ -502,6 +502,7 @@ class Round3bOpsSpec extends SparkSpec {
     val z = ids(EventOps.e5Zscore(spark, sf))
     val r = ids(EventOps.e6Robust(spark, sf))
     val i = ids(EventOps.e7Iqr(spark, sf))
+    assert(r.nonEmpty, "e6 flags nothing at the spec scale")
     val expect = (z ++ r ++ i).filter { id =>
       Seq(z(id), r(id), i(id)).count(identity) >= 2
     }

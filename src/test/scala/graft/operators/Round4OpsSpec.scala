@@ -3,43 +3,43 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.Pct
+import graft.functions.ExactStats
 
-/** Round-4 additions: the exact→approx percentile session switch
-  * (VERDICT r3 item 7). The exact path is the DuckDB-oracle contract;
-  * the approx path is the bounded-memory 100 TB form — these specs pin
-  * that flipping the flag changes memory shape, not answers (within
-  * the documented rank-accuracy bound).
+/** Round-4 additions: the exact statistics helpers every oracle-checked
+  * detector is built from, plus d10, t13 and s7.
   */
 class Round4OpsSpec extends SparkSpec {
 
-  private def withApprox[T](body: => T): T = {
-    spark.conf.set(Pct.FlagKey, "true")
-    try body finally spark.conf.set(Pct.FlagKey, "false")
-  }
-
-  test("Pct.of plans exact percentile by default and approx under the session flag") {
+  test("ExactStats.percentile interpolates the order statistics of 1..1000") {
     import spark.implicits._
     val vals = (1 to 1000).map(i => ("g", i.toDouble)).toDF("k", "v")
-    def run() = vals.groupBy("k").agg(
-        Pct.of(spark, "v", 0.25).as("q1"),
-        Pct.of(spark, "v", 0.5).as("med"),
-        Pct.of(spark, "v", 0.95).as("p95"))
+    val exact = vals.groupBy("k").agg(
+        ExactStats.percentile("v", 0.25).as("q1"),
+        ExactStats.percentile("v", 0.5).as("med"),
+        ExactStats.percentile("v", 0.95).as("p95"),
+        ExactStats.percentiles("v", Seq(0.25, 0.5, 0.95)).as("arr"))
       .collect().head
-    val exact = run()
     // exact = interpolated order statistics of 1..1000
     assert(exact.getDouble(1) == 250.75 && exact.getDouble(2) == 500.5 &&
       exact.getDouble(3) == 950.05)
-    val approx = withApprox(run())
-    // approx_percentile returns a member of the data with rank error
-    // ≤ n/accuracy < 1 here — within one neighbor gap of the
-    // interpolated exact value
-    Seq(1, 2, 3).foreach { i =>
-      assert(math.abs(approx.getDouble(i) - exact.getDouble(i)) <= 1.0,
-        s"col $i: approx ${approx.getDouble(i)} vs exact ${exact.getDouble(i)}")
-    }
-    // flag restored: the default plan is exact again (oracle contract)
-    assert(run() == exact)
+    // the array form returns the same three doubles
+    assert(exact.getSeq[Double](4) == Seq(250.75, 500.5, 950.05))
+  }
+
+  test("ExactStats.sd divides by the divisor it is given") {
+    import spark.implicits._
+    val vals = Seq(1.0, 2.0, 3.0, 4.0).toDF("v")
+    val n = col("n")
+    val row = vals.agg(count(lit(1)).as("n"),
+        ExactStats.dsum(col("v")).as("s1"),
+        ExactStats.dsumProduct(col("v"), col("v")).as("s2"))
+      .select(
+        ExactStats.sd(n, col("s1"), col("s2"), n - lit(1)),
+        ExactStats.sd(n, col("s1"), col("s2"), n))
+      .collect().head
+    // Σ(x − 2.5)² = 5 over 4 values: sample σ² = 5/3, population σ² = 5/4
+    assert(row.getDouble(0) == math.sqrt(5.0 / 3.0))
+    assert(row.getDouble(1) == math.sqrt(5.0 / 4.0))
   }
 
   test("d10_block_dedup matches a driver recompute and flags planted boilerplate spans") {
@@ -158,31 +158,5 @@ class Round4OpsSpec extends SparkSpec {
       assert(lbl(r.getLong(0)) != lbl(r.getLong(2)))
       assert(r.getInt(1) == lbl(r.getLong(0)) && r.getInt(3) == lbl(r.getLong(2)))
     }
-  }
-
-  test("q9 and e6 under the approx flag agree with the exact path within the bound") {
-    val exactQ9 = Analytics.q9Percentile(spark, sf).collect()
-      .map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2), r.getDouble(3)))).toMap
-    val approxQ9 = withApprox(Analytics.q9Percentile(spark, sf).collect()
-      .map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2), r.getDouble(3)))).toMap)
-    assert(approxQ9.keySet == exactQ9.keySet)
-    approxQ9.foreach { case (k, (a1, a2, a3)) =>
-      val (e1, e2, e3) = exactQ9(k)
-      Seq((a1, e1), (a2, e2), (a3, e3)).foreach { case (a, e) =>
-        assert(math.abs(a - e) / math.max(math.abs(e), 1.0) <= 0.02,
-          s"group $k: approx $a vs exact $e")
-      }
-    }
-    // e6's robust flags: the two paths may disagree only on boundary
-    // events (rz within noise of the 3.5 cut) — the flag sets must
-    // substantially overlap
-    val exactIds = EventOps.e6Robust(spark, sf).select("event_id")
-      .collect().map(_.getLong(0)).toSet
-    val approxIds = withApprox(EventOps.e6Robust(spark, sf).select("event_id")
-      .collect().map(_.getLong(0)).toSet)
-    assert(exactIds.nonEmpty)
-    val overlap = (exactIds & approxIds).size.toDouble /
-      math.max((exactIds | approxIds).size, 1)
-    assert(overlap >= 0.8, f"exact/approx flag overlap $overlap%.2f too low")
   }
 }

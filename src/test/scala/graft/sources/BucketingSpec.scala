@@ -9,7 +9,7 @@ import graft.SparkSpec
 class BucketingSpec extends SparkSpec {
 
   test("partitioned sink prunes partitions at read time (PartitionFilters reach the scan)") {
-    val dir = java.nio.file.Files.createTempDirectory("sink_prune").toString
+    val dir = tempDir("sink_prune").toString
     val ev = graft.Tables.events(spark, sf)
       .select(col("event_id"), col("event_type"), col("value"))
     Sinks.parquetPartitioned(ev, dir, Seq("event_type"))

@@ -12,7 +12,7 @@ class ReadersSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, sf)
       .select("doc_id", "lang", "source", "n_chars")
     val schema = docs.schema
-    val tmp = Files.createTempDirectory("graft_sources").toString
+    val tmp = tempDir("graft_sources").toString
     docs.write.option("header", "true").csv(s"$tmp/csv")
     docs.write.json(s"$tmp/json")
     val expected = docs.orderBy("doc_id").collect().toSeq
@@ -25,7 +25,7 @@ class ReadersSpec extends SparkSpec {
   test("malformed rows drop instead of poisoning the frame") {
     val schema = graft.Tables.documents(spark, sf)
       .select("doc_id", "n_chars").schema
-    val tmp = Files.createTempDirectory("graft_bad").toString
+    val tmp = tempDir("graft_bad").toString
     Files.writeString(java.nio.file.Paths.get(s"$tmp/rows.json"),
       """{"doc_id": 1, "n_chars": 10}
         |this is not json
@@ -41,7 +41,7 @@ class ReadersSpec extends SparkSpec {
     // (round 5+). Tables.events must normalize both to the same UTC
     // instants or every time-series oracle silently shifts.
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft_tslayout").toString
+    val tmp = tempDir("graft_tslayout").toString
     val base = graft.Tables.events(spark, sf).limit(200)
       .select(col("event_id"), col("ts"))
     val micros = base.select(col("event_id"), unix_micros(col("ts")).as("us"))
@@ -62,7 +62,7 @@ class ReadersSpec extends SparkSpec {
   }
 
   test("partitioned sink enables partition pruning on read") {
-    val tmp = Files.createTempDirectory("graft_sink").toString
+    val tmp = tempDir("graft_sink").toString
     Sinks.parquetPartitioned(
       graft.Tables.documents(spark, sf).select("doc_id", "lang", "n_chars"),
       s"$tmp/docs", Seq("lang"))

@@ -50,7 +50,7 @@ class KafkaWiringSpec extends SparkSpec {
     val valueFrame = in.toDF().selectExpr("value")
     val t = intercept[Throwable] {
       val q = Ingest.toKafka(valueFrame, "mock-broker:9092",
-        "energy_stream", "/tmp/graft_kafka_smoke_ckpt")
+        "energy_stream", tempDir("graft_kafka_smoke_ckpt").toString)
       // if sink lookup is lazy, force a batch so the failure surfaces
       try q.processAllAvailable() finally q.stop()
     }

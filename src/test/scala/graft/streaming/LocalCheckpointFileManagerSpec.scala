@@ -17,11 +17,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * directory (no streaming query): atomic publish on close, nothing
   * left by cancel, a loud `FileAlreadyExistsException` for a second
   * writer, and listings identical to Spark's default manager. */
-class LocalCheckpointFileManagerSpec extends AnyFunSuite {
+class LocalCheckpointFileManagerSpec extends AnyFunSuite with graft.TempDirs {
 
   private val conf = new Configuration()
 
-  private def tmpDir(): JPath = Files.createTempDirectory("graft_cfm")
+  private def tmpDir(): JPath = tempDir("graft_cfm")
   private def hpath(p: JPath) = new Path("file:" + p.toAbsolutePath)
   private def ours(dir: JPath) = new LocalCheckpointFileManager(hpath(dir), conf)
   private def sparks(dir: JPath) =

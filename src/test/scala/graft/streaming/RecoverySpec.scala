@@ -26,7 +26,7 @@ class RecoverySpec extends SparkSpec {
     implicit val sc = spark.sqlContext
     implicit val ss = spark
     import spark.implicits._
-    val cp = java.nio.file.Files.createTempDirectory("st8cp").toString
+    val cp = tempDir("st8cp").toString
     // idempotent sink: batch id -> rows; a replayed id overwrites itself
     val sink = scala.collection.concurrent.TrieMap[Long, Seq[DriftAlarm]]()
     val in = MemoryStream[Reading]
@@ -111,7 +111,7 @@ class RecoverySpec extends SparkSpec {
       sink.values.flatten.toSeq.sortBy(f => (f.plant_type, f.ts.getTime))
     }
     def tmp(prefix: String) =
-      java.nio.file.Files.createTempDirectory(prefix).toString
+      tempDir(prefix).toString
     val restarted = run(tmp("st3cp"), restart = true)
     val straight = run(tmp("st3cp1"), restart = false)
     // a fresh store would hold 3 rows per key (< MinTrain) and score
@@ -161,7 +161,7 @@ class RecoverySpec extends SparkSpec {
     }
     def flags() = sink.values.flatten.toSeq.sortBy(f => (f.plant_type, f.ts.getTime))
     def tmp(prefix: String) =
-      java.nio.file.Files.createTempDirectory(prefix).toString
+      tempDir(prefix).toString
     def exists(cp: String, rel: String) =
       java.nio.file.Files.exists(java.nio.file.Paths.get(cp, rel))
 
@@ -222,7 +222,7 @@ class RecoverySpec extends SparkSpec {
     val before = Seq(stationary(0, 30), stationary(30, 50), stationary(50, 54))
     val shift = for (i <- 54 until 57; k <- keys) yield r(k, i, 103.0)
     def run(restart: Boolean): Seq[DriftAlarm] = {
-      val cp = java.nio.file.Files.createTempDirectory("st8rocks").toString
+      val cp = tempDir("st8rocks").toString
       val sink = scala.collection.concurrent.TrieMap[Long, Seq[DriftAlarm]]()
       val in = MemoryStream[Reading](Encoders.product[Reading], rocks.sqlContext)
       def start() = DriftDetector.detect(in.toDS())
@@ -263,7 +263,7 @@ class RecoverySpec extends SparkSpec {
     implicit val ss = spark
     import spark.implicits._
     val nKeys = 10000
-    val cp = java.nio.file.Files.createTempDirectory("st8cp10k").toString
+    val cp = tempDir("st8cp10k").toString
     val sink = scala.collection.concurrent.TrieMap[Long, Seq[DriftAlarm]]()
     val in = MemoryStream[Reading]
     def start() = DriftDetector.detect(in.toDS())
@@ -306,8 +306,8 @@ class RecoverySpec extends SparkSpec {
     implicit val sc = spark.sqlContext
     import spark.implicits._
     val nKeys = 10000
-    val dir = java.nio.file.Files.createTempDirectory("st24snap10k").toString
-    val cp = java.nio.file.Files.createTempDirectory("st24cp10k").toString
+    val dir = tempDir("st24snap10k").toString
+    val cp = tempDir("st24cp10k").toString
     val in = MemoryStream[(String, Long, Double, Long)]
     def start() = StreamSnapshot.latestPerKey(
         in.toDF().toDF("event_type", "secs", "value", "event_id"), dir)
@@ -342,7 +342,7 @@ class RecoverySpec extends SparkSpec {
     implicit val sc = spark.sqlContext
     implicit val ss = spark
     import spark.implicits._
-    val cp = java.nio.file.Files.createTempDirectory("st12cp").toString
+    val cp = tempDir("st12cp").toString
     val sink = scala.collection.concurrent.TrieMap[Long, Seq[org.apache.spark.sql.Row]]()
     val in = MemoryStream[(Timestamp, String, Double)]
     def start() = SessionWindow.sessions(

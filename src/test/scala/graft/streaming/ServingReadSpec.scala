@@ -22,7 +22,7 @@ class ServingReadSpec extends SparkSpec {
   test("st24 snapshot serves consistent reads while the stream runs") {
     implicit val sc = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("serve24").toString
+    val dir = tempDir("serve24").toString
     val in = MemoryStream[(String, Long, Double, Long)]
     val q = StreamSnapshot.latestPerKey(
         in.toDF().toDF("event_type", "secs", "value", "event_id"), dir)

@@ -12,7 +12,7 @@ class StreamSnapshotSpec extends SparkSpec {
   test("st24 foreachBatch snapshot converges to the batch argmax per key") {
     implicit val sc = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("st24snap").toString
+    val dir = tempDir("st24snap").toString
     val ev = graft.Tables.events(spark, sf)
       .select($"event_type", $"ts".cast("long").as("secs"), $"value",
         $"event_id")
@@ -45,7 +45,7 @@ class StreamSnapshotSpec extends SparkSpec {
 
   test("st24 replayed batch merges pre-batch state, not its own committed write") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("st24replay").toString
+    val dir = tempDir("st24replay").toString
     def row(t: String, s: Long, v: Double, id: Long) =
       Seq((t, s, v, id)).toDF("event_type", "secs", "value", "event_id")
     // batch 0 committed v0; batch 1's parquet write committed (v1 +

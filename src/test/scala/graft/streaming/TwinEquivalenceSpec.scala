@@ -32,7 +32,7 @@ class TwinEquivalenceSpec extends SparkSpec {
     val parsed = in.toDF().toDF("ts", "event_type", "value")
     val q = WindowAgg.tumbling(parsed, "ts", Seq("event_type"),
         Seq(count(lit(1)).as("n"),
-          EventOps.dsum(col("value")).as("sum_value")),
+          graft.functions.ExactStats.dsum(col("value")).as("sum_value")),
         watermark = "2 hours", window_ = "1 hour")
       .select(unix_timestamp(col("window.start")).as("h"),
         col("event_type"), col("n"), col("sum_value"))
