@@ -246,8 +246,8 @@ object Multimodal {
 
   /** m5_percep_clusters — perceptual duplicate GROUPS: m4's verified
     * pair list resolved into connected components
-    * ([[Dedup.connectedComponents]] — the same Shiloach-Vishkin
-    * pointer-jumping core d8 runs on text pairs), each member mapped
+    * ([[Dedup.connectedComponents]] — the same resolver d8 runs on
+    * text pairs), each member mapped
     * to its cluster's min-id keeper. Pairwise output alone cannot
     * make a drop decision when A~B~C but A≁C; this is that decision
     * layer for the media side of the corpus, composed entirely from
@@ -255,8 +255,10 @@ object Multimodal {
     * (clusters, keeper policies, soft weights) applies to images.
     *
     * Scale: m4's candidate volume is df-capped (never all-pairs);
-    * the CC rounds are O(log diameter) equi-joins on pair ids whose
-    * cost tracks the PAIR list, not the corpus. [sql-oracle]: d8's
+    * the pair list resolves on the driver up to
+    * [[Dedup.MaxDriverEdges]] pairs and through O(log diameter)
+    * equi-join rounds on pair ids above it — either way the cost
+    * tracks the PAIR list, not the corpus. [sql-oracle]: d8's
     * recursive-reachability CTE over m4's replayed pair list; the spec
     * additionally pins cluster = transitive closure of m4's pairs
     * recomputed driver-side, keeper = min id. */

@@ -12,8 +12,9 @@ import graft.operators.{AsOf, Dedup, Multimodal}
   * would silently corrupt MANY operators at once:
   *
   *  - [[Dedup.connectedComponents]] (d8/d12/m5 + every keeper policy)
-  *    vs a driver union-find on arbitrary graphs, including long
-  *    chains that force the pointer-jump path;
+  *    and its distributed pointer-jump kernel, each vs a reference
+  *    union-find on arbitrary graphs, including long chains that force
+  *    pointer jumps;
   *  - [[graft.plans.TopKPerGroup.perKey]] — custom logical node +
   *    strategy + physical operator — vs the row_number window it
   *    replaces, on tie-heavy data across several k;
@@ -64,11 +65,42 @@ class PropertySpec extends SparkSpec {
       val minOf = verts.groupBy(roots).map { case (r, vs) => r -> vs.min }
       val expect = verts.map(v => v -> minOf(roots(v))).toMap
 
-      val got = Dedup.connectedComponents(
-          edges.toDF("a", "b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expect, s"seed=$seed: CC mismatch (${edges.size} edges)")
+      // the public entry (driver union-find at these sizes) and the
+      // distributed pointer-jump kernel, called directly
+      // odd seeds: nullable endpoint columns (no nulls), as a parquet
+      // pair list reads back; the entry's columns are non-nullable
+      val df = if (seed % 2 == 0) edges.toDF("a", "b")
+        else edges.map { case (a, b) => (Option(a), Option(b)) }.toDF("a", "b")
+      val entry = Dedup.connectedComponents(df)
+      val kernel = Dedup.pointerJumpComponents(df)
+      assert(entry.schema.map(f => f.name -> f.dataType) == kernel.schema.map(f => f.name -> f.dataType),
+        s"seed=$seed: schema mismatch")
+      for ((path, out) <- Seq("entry" -> entry, "kernel" -> kernel)) {
+        val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == expect, s"seed=$seed $path: CC mismatch (${edges.size} edges)")
+      }
     }
+  }
+
+  test("connectedComponents fails loud on a null endpoint") {
+    import spark.implicits._
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => x.getMessage +: messages(x.getCause))
+    for (edges <- Seq(Seq((Some(1L), Some(2L)), (Some(3L), None)),
+        Seq((None, Some(2L))))) {
+      val e = intercept[Exception] {
+        Dedup.connectedComponents(edges.toDF("a", "b")).collect()
+      }
+      assert(messages(e).exists(m => m != null && m.contains("null endpoint")),
+        s"expected the null-endpoint error, got: $e")
+    }
+  }
+
+  test("the driver bound: MaxDriverEdges edges resolve on the driver, one more does not") {
+    assert(Dedup.MaxDriverEdges == (1L << 20))
+    assert(Dedup.resolvesOnDriver(0))
+    assert(Dedup.resolvesOnDriver(Dedup.MaxDriverEdges))
+    assert(!Dedup.resolvesOnDriver(Dedup.MaxDriverEdges + 1))
   }
 
   // ---------------------------------------------------------------

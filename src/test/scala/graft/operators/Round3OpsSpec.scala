@@ -99,11 +99,14 @@ class Round3OpsSpec extends SparkSpec {
     // a duplicate CHAIN (each doc near-dups only its neighbor) is the
     // diameter worst case: O(d) label propagation needs 299 rounds and
     // trips the convergence guard; pointer jumping needs ~log2(300)
+    // (the distributed kernel; the public entry resolves a list this
+    // small on the driver and must agree)
     val edges = (0L until 299L).map(i => (i, i + 1)).toDF("a", "b")
-    val got = Dedup.connectedComponents(edges).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.length == 300)
-    assert(got.forall(_._2 == 0L), "every chain vertex joins component 0")
+    for (out <- Seq(Dedup.pointerJumpComponents(edges), Dedup.connectedComponents(edges))) {
+      val got = out.collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(got.length == 300)
+      assert(got.forall(_._2 == 0L), "every chain vertex joins component 0")
+    }
   }
 
   test("t10_repetition ratios are exact and bounded") {
