@@ -78,7 +78,9 @@ object GraftSession {
     *   when no dir is given.
     * - streaming checkpoints on local paths write through `java.nio`
     *   ([[streaming.LocalCheckpointFileManager]]): Hadoop's local file
-    *   system costs ~40 ms per checkpoint file, several per batch. */
+    *   system costs ~40 ms per checkpoint file, several per batch.
+    * - codegen cache: [[CodegenCacheEntries]] compiled classes instead
+    *   of Spark's 100. */
   private[graft] def localConf(cores: Int, dataDir: String,
       env: String => Option[String]): Map[String, String] = Map(
     "spark.master" -> s"local[$cores]",
@@ -92,7 +94,19 @@ object GraftSession {
     "spark.io.compression.codec" -> codecFor(dataDir, env),
     "spark.sql.streaming.checkpointFileManagerClass" ->
       classOf[streaming.LocalCheckpointFileManager].getName,
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
     "spark.ui.enabled" -> "false")
+
+  /** Size of Spark's generated-class cache (a static conf: a JVM reads
+    * it once, at its first code generation). The cache is keyed by generated
+    * source, so a plan built again compiles nothing while its classes
+    * are cached. Spark's 100 entries are fewer than one batch_iterative
+    * pass generates (~140 classes), and an LRU cache walked in a cycle
+    * longer than itself misses on every lookup: each pass recompiled
+    * every class. All 104 queries at sf0.001 generate ~1,260 distinct
+    * classes; 2048 holds them for ~8 MB of metaspace (OPERATIONS.md
+    * "Codegen cache"). */
+  val CodegenCacheEntries: Int = 2048
 
   /** Local session: `cores` threads, AQE on, graft extensions (SQL
     * functions + planner strategies) installed, [[localConf]] applied

@@ -1,6 +1,7 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Pins the SF-aware shuffle-codec choice (r11, VERDICT r10 item 2):
   * zstd is the shipped default from the sf10 input class up (measured
@@ -12,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the at-scale class). A silent flip of any of these is a perf
   * regression at one scale or the other, so the choice is spec-pinned.
   */
-class GraftSessionSpec extends AnyFunSuite with TempDirs {
+class GraftSessionSpec extends SparkSpec {
 
   private def tmpDirWithBytes(n: Long): java.io.File = {
     val d = tempDir("graft_codec").toFile
@@ -73,6 +74,7 @@ class GraftSessionSpec extends AnyFunSuite with TempDirs {
       "spark.io.compression.codec" -> "lz4",
       "spark.sql.streaming.checkpointFileManagerClass" ->
         "graft.streaming.LocalCheckpointFileManager",
+      "spark.sql.codegen.cache.maxEntries" -> "2048",
       "spark.ui.enabled" -> "false"))
     val small = tmpDirWithBytes(50L << 20)
     assert(GraftSession.localConf(6, small.getAbsolutePath, noEnv)
@@ -99,5 +101,19 @@ class GraftSessionSpec extends AnyFunSuite with TempDirs {
     val cpus = Map("SPARK_GRAFT_CPUS" -> "3").get _
     assert(GraftSession.defaultCores(cpus) === 3)
     assert(GraftSession.localConf(6, "", cpus) === base)
+  }
+
+  // ---- the codegen cache ([[GraftSession.CodegenCacheEntries]]): a
+  // plan built again must find its classes cached even after far more
+  // than Spark's default 100 other classes were generated in between
+
+  test("a rebuilt plan compiles nothing after 300 other generated classes") {
+    def run(k: Long): Long =
+      spark.range(4).select((col("id") * lit(k)).as("x")).queryExecution.toRdd.count()
+    run(7919L)
+    (1L to 300L).foreach(run)
+    val before = METRIC_COMPILATION_TIME.getCount
+    run(7919L)
+    assert(METRIC_COMPILATION_TIME.getCount === before)
   }
 }
