@@ -25,9 +25,14 @@ object GraftIsolationForest {
     else 2.0 * (math.log(n - 1.0) + 0.5772156649015329) - 2.0 * (n - 1.0) / n
 
   /** One isolation tree in flat-array form (node i: children 2i+1/2i+2
-    * implicit via left/right indices; feature = -1 marks a leaf). */
+    * implicit via left/right indices; feature = -1 marks a leaf).
+    * `leafAdj(i)` is `avgPathLen(size(i))`, computed once per node, so
+    * a walk adds a stored double at its leaf instead of taking a `log`
+    * there; the sum is the same double, so scores are bit-identical. */
   final case class Tree(feature: Array[Int], split: Array[Double],
       left: Array[Int], right: Array[Int], size: Array[Int]) extends Serializable {
+    private val leafAdj: Array[Double] = size.map(n => avgPathLen(n.toDouble))
+
     def pathLength(x: Array[Double]): Double = {
       var node = 0
       var depth = 0.0
@@ -35,7 +40,7 @@ object GraftIsolationForest {
         node = if (x(feature(node)) < split(node)) left(node) else right(node)
         depth += 1.0
       }
-      depth + avgPathLen(size(node).toDouble)
+      depth + leafAdj(node)
     }
 
     /** 1-D specialization: no feature-array indirection, no input
@@ -48,7 +53,7 @@ object GraftIsolationForest {
         node = if (v < split(node)) left(node) else right(node)
         depth += 1.0
       }
-      depth + avgPathLen(size(node).toDouble)
+      depth + leafAdj(node)
     }
   }
 
@@ -77,9 +82,9 @@ object GraftIsolationForest {
     * an interval between split points), so the WHOLE forest collapses
     * to one sorted boundary array + one precomputed score per interval.
     * Scoring = one binary search (~14 comparisons over ~13k boundaries
-    * for 100×256 trees) instead of 100 tree walks with a `log` at every
-    * leaf — bit-identical to [[Forest.score1]] by construction, because
-    * each interval's score IS score1 evaluated at its left endpoint
+    * for 100×256 trees) instead of 100 tree walks — bit-identical to
+    * [[Forest.score1]] by construction, because each interval's score
+    * IS score1 evaluated at its left endpoint
     * (trees route v < split left, so intervals are left-closed and no
     * boundary lies strictly inside one). */
   final case class Step1(bounds: Array[Double],

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.FromJsonBytes
+
 /** st1_ingest — Kafka-style JSON ingest with schema enforcement
   * (SURVEY.md §2.H; reference app/app3_ML.py:34-63: readStream from
   * Kafka, `from_json` with an explicit telemetry schema, timestamp
@@ -14,8 +16,9 @@ import org.apache.spark.sql.types._
   * `CAST(value AS STRING)` — so the same transform is unit-testable
   * with MemoryStream and attachable to a real Kafka source unchanged.
   *
-  * Scale: pure narrow map (parse + filter), no shuffle, fully
-  * codegen'd; parallelism = source partitions.
+  * Scale: pure narrow map (parse + filter), no shuffle, one
+  * whole-stage-codegen stage whose parse calls Spark's Jackson parser
+  * once per row; parallelism = source partitions.
   */
 object Ingest {
 
@@ -91,17 +94,27 @@ object Ingest {
 
   /** Parse `value` JSON → typed columns, convert the ISO timestamp, and
     * enforce the reference's validation: shared fields present and
-    * numeric (malformed rows → dropped, mirroring dropna). The sparse
+    * numeric (malformed rows → dropped, mirroring dropna). A timestamp
+    * that does not parse is malformed too: `try_to_timestamp` gives
+    * null, where ANSI `to_timestamp` would stop the query. The sparse
     * plant-specific columns stay nullable — the reference drops rows on
     * the per-type feature subset only (app3_ML.py:119-121), which the
-    * detector handles downstream. */
+    * detector handles downstream.
+    *
+    * The parse is [[FromJsonBytes]]: `from_json`'s result, read from
+    * the value's UTF-8 bytes (OPERATIONS.md "Ingest JSON path"). It
+    * runs inside `inline(array(...))` so that it runs once per row:
+    * over a plain Project, Catalyst pushes the validation filter below
+    * the parse with the parse substituted into every conjunct (six
+    * parses per row in the optimized plan), while a filter on a
+    * Generate's output stays above it. */
   def parseTelemetry(raw: DataFrame): DataFrame =
-    raw.select(from_json(col("value"), telemetrySchema).as("r"))
+    raw.select(inline(array(FromJsonBytes.col(col("value"), telemetrySchema))))
       .select(Seq(
-        to_timestamp(col("r.timestamp")).as("ts"),
-        col("r.plant_type"), col("r.region"),
-        col("r.power_output"), col("r.demand"), col("r.grid_frequency")) ++
-        plantSpecificFields.map(f => col(s"r.$f")): _*)
+        try_to_timestamp(col("timestamp")).as("ts"),
+        col("plant_type"), col("region"),
+        col("power_output"), col("demand"), col("grid_frequency")) ++
+        plantSpecificFields.map(col): _*)
       .filter(col("ts").isNotNull && col("plant_type").isNotNull &&
         col("power_output").isNotNull && col("demand").isNotNull &&
         col("grid_frequency").isNotNull)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupStateTimeout, GroupState, OutputMode}
 
 import graft.ml.GraftIsolationForest
@@ -57,7 +58,8 @@ case class RingState(buf: Array[Double], pos: Int, count: Long, dim: Int)
   * Scale: state is O(cap·dim) doubles per key — ~16 KB at cap 500,
   * dim 4 — and keys are hash-partitioned across executors, so state
   * scales with key cardinality only, never input volume. Scoring is
-  * executor-local; the only shuffle is the groupByKey hash exchange.
+  * executor-local; the only shuffle is the hash exchange on the
+  * `plant_type` column.
   */
 object SlidingDetector {
 
@@ -158,10 +160,16 @@ object SlidingDetector {
   /** Wire the detector over a parsed telemetry Dataset (streaming or
     * batch — same code path, which is what the specs exercise). State
     * is kept per key indefinitely: the reference's plant_type universe
-    * is fixed. */
+    * is fixed.
+    *
+    * Keyed by the `plant_type` column, not by `groupByKey(_.plant_type)`:
+    * a key function needs every row decoded into a [[Reading]] on the
+    * map side (`AppendColumns`) just to compute the key. A checkpoint
+    * written under the key function restarts under the column
+    * (OPERATIONS.md "Ingest JSON path"). */
   def detect(parsed: Dataset[Reading]): Dataset[Flagged] = {
     import parsed.sparkSession.implicits._
-    parsed.groupByKey(_.plant_type)
+    parsed.groupBy(col("plant_type")).as[String, Reading]
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         detectGroup)
   }

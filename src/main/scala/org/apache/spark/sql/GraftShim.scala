@@ -11,6 +11,12 @@ object GraftShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `s` with every field, nested ones too, made nullable — what
+    * `from_json` forces on its schema (`DataType.asNullable` is
+    * `private[spark]`). */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** Build a DataFrame from a (possibly custom) logical plan. */
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =

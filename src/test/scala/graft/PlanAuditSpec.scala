@@ -572,6 +572,50 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("Pipeline.detect parses each value once, keys by the plant_type column, and shuffles once") {
+    // st3's per-row path: the Reader-based from_json, a map-side decode
+    // of every row into a Reading just to compute the key
+    // (AppendColumns), or a validation filter that re-parses the value
+    // per conjunct would each come back here first
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, JsonToStructs}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{AppendColumnsExec, AppendColumnsWithObjectExec}
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    implicit val sc = spark.sqlContext
+    implicit val ss = spark
+    import spark.implicits._
+    def audit(label: String, plan: SparkPlan): Unit = {
+      val nodes = Explain.planNodes(plan)
+      val exprs = nodes.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+      assert(!nodes.exists(n => n.isInstanceOf[AppendColumnsExec] ||
+        n.isInstanceOf[AppendColumnsWithObjectExec]), s"$label plans AppendColumns:\n$plan")
+      assert(!exprs.exists(_.isInstanceOf[JsonToStructs]), s"$label plans from_json:\n$plan")
+      assert(exprs.count(_.isInstanceOf[graft.functions.FromJsonBytes]) == 1,
+        s"$label must parse each value exactly once:\n$plan")
+      val keys = nodes.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+      assert(keys.size == 1, s"$label plans ${keys.size} exchanges:\n$plan")
+      keys.head match {
+        case HashPartitioning(Seq(a: Attribute), _) =>
+          assert(a.name == "plant_type", s"$label hashes on ${a.name}")
+        case p => fail(s"$label's exchange is not a hash on plant_type: $p")
+      }
+    }
+    val values = graft.streaming.Pipeline.toKafkaValue(
+      graft.streaming.Generator.telemetry(spark.range(200).toDF("value")))
+      .as[String].collect().toSeq
+    audit("batch", graft.streaming.Pipeline.detect(values.toDF("value"))
+      .queryExecution.executedPlan)
+    val in = MemoryStream[String]
+    val q = graft.streaming.Pipeline.detect(in.toDF())
+      .writeStream.format("noop").start()
+    try {
+      in.addData(values)
+      q.processAllAvailable()
+      audit("streaming", q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan)
+    } finally q.stop()
+  }
+
   /** Spark jobs started on this thread while `body` runs, counted
     * through its own job group once the listener bus has caught up. */
   private def jobsDuring(body: => Unit): Int = {

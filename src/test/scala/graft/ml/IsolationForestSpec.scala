@@ -51,6 +51,47 @@ class IsolationForestSpec extends AnyFunSuite {
     }
   }
 
+  /** Tree walk that takes `avgPathLen` at the leaf it reaches: the
+    * scoring the stored per-node constants must reproduce bit for bit. */
+  private def refScore(f: GraftIsolationForest.Forest, x: Array[Double]): Double = {
+    var s = 0.0
+    f.trees.foreach { t =>
+      var node = 0
+      var depth = 0.0
+      while (t.feature(node) >= 0) {
+        node = if (x(t.feature(node)) < t.split(node)) t.left(node) else t.right(node)
+        depth += 1.0
+      }
+      s += depth + GraftIsolationForest.avgPathLen(t.size(node).toDouble)
+    }
+    math.pow(2.0, -(s / f.trees.length) /
+      GraftIsolationForest.avgPathLen(f.sampleSize.toDouble))
+  }
+
+  test("score, score1 and compile1 equal a leaf-log reference bit for bit") {
+    for (dim <- Seq(1, 2, 4); seed <- Seq(1L, 7L, 42L, 1234L);
+         (trees, sample) <- Seq((50, 128), (100, 256))) {
+      val rng = new scala.util.Random(seed)
+      val pool = Array.fill(600)(Array.fill(dim)(rng.nextGaussian()))
+      val f = GraftIsolationForest.fit(pool, numTrees = trees, sampleSize = sample,
+        seed = seed)
+      // training points, fresh draws, far outliers and exact split values
+      val splits = f.trees.flatMap(t => t.split.indices.filter(t.feature(_) >= 0)
+        .map(i => Array.fill(dim)(t.split(i)))).take(300)
+      val probes = pool.take(200) ++ Array.fill(200)(Array.fill(dim)(rng.nextGaussian() * 4)) ++
+        Array(Array.fill(dim)(1e9), Array.fill(dim)(-1e9), Array.fill(dim)(0.0)) ++ splits
+      val where = s"dim $dim seed $seed trees $trees"
+      probes.foreach(p => assert(f.score(p) == refScore(f, p), s"score diverged ($where)"))
+      if (dim == 1) {
+        val step = GraftIsolationForest.compile1(f)
+        probes.foreach { p =>
+          assert(f.score1(p(0)) == refScore(f, p), s"score1 diverged ($where)")
+          assert(step.score(p(0)) == refScore(f, p), s"compile1 diverged ($where)")
+        }
+      }
+    }
+  }
+
   test("avgPathLen matches the closed form on small n") {
     assert(GraftIsolationForest.avgPathLen(1.0) == 0.0)
     assert(GraftIsolationForest.avgPathLen(2.0) == 1.0)

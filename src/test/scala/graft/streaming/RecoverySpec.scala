@@ -125,6 +125,54 @@ class RecoverySpec extends SparkSpec {
       s"restarted flags $restarted differ from uninterrupted $straight")
   }
 
+  test("an st3 checkpoint keyed by groupByKey(_.plant_type) restarts under column keying") {
+    // st3 keyed its state by a key function before it keyed by the
+    // plant_type column. The state key is then named `value`, not
+    // `plant_type`; a checkpoint written that way must still resume,
+    // with every key's window intact
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+    val keys = Seq("plant_a", "plant_b")
+    def r(k: String, sec: Int, v: Double) = Reading(ts(sec), k, v, 90.0, 50.0)
+    val warm = for (i <- 0 until 60; k <- keys) yield r(k, i, 100.0 + (i % 7) * 0.5)
+    val spiked = keys.flatMap(k =>
+      Seq(r(k, 120, 101.0), r(k, 121, 400.0), r(k, 122, 102.0)))
+    def byKeyFunction(in: Dataset[Reading]) =
+      in.groupByKey(_.plant_type)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+          SlidingDetector.detectGroup)
+    def run(cp: String, first: Dataset[Reading] => Dataset[Flagged]): Seq[Flagged] = {
+      val sink = scala.collection.concurrent.TrieMap[Long, Seq[Flagged]]()
+      val in = MemoryStream[Reading]
+      def start(detect: Dataset[Reading] => Dataset[Flagged]) = detect(in.toDS())
+        .writeStream
+        .option("checkpointLocation", cp)
+        .foreachBatch { (ds: Dataset[Flagged], id: Long) =>
+          sink(id) = ds.collect().toSeq; ()
+        }
+        .start()
+      val q1 = start(first)
+      in.addData(warm)
+      q1.processAllAvailable()
+      q1.stop()
+      val q2 = start(SlidingDetector.detect)
+      in.addData(spiked)
+      q2.processAllAvailable()
+      q2.stop()
+      sink.values.flatten.toSeq.sortBy(f => (f.plant_type, f.ts.getTime))
+    }
+    val resumed = run(tempDir("st3cp_keyfn").toString, byKeyFunction)
+    val columnOnly = run(tempDir("st3cp_col").toString, SlidingDetector.detect)
+    keys.foreach { k =>
+      assert(resumed.exists(f => f.plant_type == k && f.power_output == 400.0 &&
+        math.abs(f.zscore) > SlidingDetector.ZThresh),
+        s"$k's spike not flagged after the restart: $resumed")
+    }
+    assert(resumed == columnOnly,
+      s"flags after a key-function checkpoint $resumed differ from $columnOnly")
+  }
+
   test("a checkpoint written by Spark's default manager, killed before its commit, resumes under the local one") {
     // the shipped session writes checkpoints through
     // LocalCheckpointFileManager; a checkpoint an older build wrote
